@@ -119,22 +119,17 @@ def pct(values: list[float], q: float) -> float:
     return v[k]
 
 
-def pct_weighted(values: list[float], weights: list[int], q: float) -> float:
-    """Nearest-rank percentile of ``values`` each repeated ``weights`` times."""
-    total = sum(weights)
-    rank = max(1, -(-q * total // 100))
-    seen = 0
-    for v, w in sorted(zip(values, weights)):
-        seen += w
-        if seen >= rank:
-            return v
-    raise ValueError("no samples")
-
-
 def median(values: list[float]) -> float:
+    """Median of ``values``; 0.0 for none (every query of a kind failed)."""
     v = sorted(values)
     n = len(v)
+    if not n:
+        return 0.0
     return v[n // 2] if n % 2 else (v[n // 2 - 1] + v[n // 2]) / 2
+
+
+def mean(values: list[float]) -> float:
+    return sum(values) / len(values) if values else 0.0
 
 
 @dataclass

@@ -6,11 +6,10 @@ Two kinds of input, both a pure function of the seed:
   ``events``, ``documents``, ``embeddings``) as parquet, with the same
   columns, types and value distributions as the repository's synthetic
   test data, at a chosen scale factor.
-* ``replay_archive`` builds an OCS chunk archive: Zipf-skewed connection
+* ``chunk_archive`` builds an OCS chunk archive: Zipf-skewed connection
   keys, a share of heartbeats, and chunk boundaries that split frames, so
-  the framing operator's carry buffer does real work.
-  ``write_spool`` writes it as the JSON-lines files
-  ``sources.spool_chunk_stream`` reads.
+  the framing operator's carry buffer does real work. The traced
+  ``ingest`` run times ``framing.frame_batch`` on it directly.
 """
 
 from __future__ import annotations
@@ -226,21 +225,14 @@ def write_tables(out_dir: str, sf: float, seed: int) -> dict[str, int]:
 
 @dataclass
 class Archive:
-    """A replay archive: chunk rows in arrival order plus, per connection,
-    the exact non-heartbeat frame payloads the sink must deliver."""
+    """A chunk archive: chunk rows in arrival order."""
 
     conn_id: list[str]
     chunk: list[str]
     arrival_seq: np.ndarray
-    expected: dict[str, list[str]]
-    n_frames: int
-
-    @property
-    def n_events(self) -> int:
-        return sum(len(v) for v in self.expected.values())
 
 
-def replay_archive(
+def chunk_archive(
     seed: int,
     n_chunks: int,
     n_connections: int = 64,
@@ -292,28 +284,8 @@ def replay_archive(
         chunk_out.append(chunks_of_key[k][cursor[k]])
         cursor[k] += 1
         conn_ids.append(f"conn-{k}")
-    expected = {
-        f"conn-{k}": [p for p in frames if p != HEARTBEAT]
-        for k, frames in enumerate(frames_of_key)
-        if frames
-    }
     return Archive(
         conn_id=conn_ids,
         chunk=chunk_out,
         arrival_seq=np.arange(len(chunk_out), dtype="int64"),
-        expected=expected,
-        n_frames=n_frames,
     )
-
-
-def write_spool(archive: Archive, spool_dir: str, n_files: int) -> None:
-    """Write the archive as ``n_files`` JSON-lines spool files, in arrival
-    order (file names sort in that order)."""
-    os.makedirs(spool_dir, exist_ok=True)
-    df = pd.DataFrame(
-        {"conn_id": archive.conn_id, "chunk": archive.chunk, "arrival_seq": archive.arrival_seq}
-    )
-    for i, part in enumerate(np.array_split(np.arange(len(df)), n_files)):
-        df.iloc[part].to_json(
-            os.path.join(spool_dir, f"part-{i:05d}.json"), orient="records", lines=True
-        )

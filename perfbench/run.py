@@ -1,17 +1,18 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload {ingest,replay,queries} --seed N \
+    python3 perfbench/run.py --workload {ingest,queries} --seed N \
         --seconds S --trace {0,1}
 
 Run from the repository root. It pins Spark to ``local[nproc]``, keeps its
 scratch files under ``perfbench/.work``, builds the workload's inputs from
-the seed, measures for about ``S`` seconds after warm-up, checks every
-output, and prints two JSON lines: host facts and extra figures, then the
-result ``{"correct", "attempted", "failed", "metrics"}``. ``--trace 0``
-reports the end-to-end metrics of ``BENCHMARK.json``; ``--trace 1`` runs
-the same workload with spans and the Spark event log on and reports the
-per-layer metrics (a metric whose layer the workload does not touch reads
-0). Spans go to ``perfbench/.out``.
+the seed, times after warm-up a fixed amount of work sized from ``S``
+(micro-batches or query passes), checks every output, and prints two JSON
+lines: host facts and extra figures, then the result ``{"correct",
+"attempted", "failed", "metrics"}``. ``--trace 0`` reports the end-to-end
+metrics of ``BENCHMARK.json``; ``--trace 1`` runs the same workload with
+spans and the Spark event log on and reports the per-layer metrics (a
+metric whose layer the workload does not touch reads 0). Spans go to
+``perfbench/.out``.
 """
 
 from __future__ import annotations
@@ -29,7 +30,7 @@ import sys  # noqa: E402
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-WORKLOADS = ("ingest", "replay", "queries")
+WORKLOADS = ("ingest", "queries")
 
 
 class Context:
@@ -43,6 +44,7 @@ class Context:
         self.seed = args.seed
         self.small = args.small
         self.corrupt = args.corrupt
+        self.put_delay_ms = args.put_delay_ms
         self.work_dir = work_dir
         self.generator_s = 0.0
         self.timed_start: float | None = None
@@ -89,6 +91,9 @@ def parse(argv: list[str] | None):
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--small", action="store_true", help="tiny inputs (self-test)")
     ap.add_argument("--corrupt", action="store_true", help="mangle one output (self-test)")
+    ap.add_argument(
+        "--put-delay-ms", type=float, default=0.0, help="ingest: slow the sink per event (self-test)"
+    )
     return ap.parse_args(argv)
 
 
@@ -135,12 +140,7 @@ def main(argv: list[str] | None = None) -> int:
     layers["session.get_spark_s"] = session.get_spark_s
     layers["registry.load_modules_s"] = session.load_modules_s
     layers["trace.spans"] = float(len(tracer.spans))
-    for k, v in result["e2e"].items():
-        layers[f"traced.{k}"] = v
     layers["traced.setup_s"] = setup_s
-    out_dir = os.path.join(HERE, ".out")
-    os.makedirs(out_dir, exist_ok=True)
-    last_untraced = os.path.join(out_dir, f"last-{args.workload}.json")
     host.update(
         {
             "workload": args.workload,
@@ -154,18 +154,10 @@ def main(argv: list[str] | None = None) -> int:
         }
     )
     if args.trace:
-        tracer.write(os.path.join(out_dir, f"spans-{run_id}.jsonl"))
-        if os.path.exists(last_untraced):
-            with open(last_untraced) as f:
-                base = json.load(f)
-            host["tracing_overhead"] = {
-                k: (values[k] - v) / v for k, v in base.items() if k in values and v
-            }
+        tracer.write(os.path.join(HERE, ".out", f"spans-{run_id}.jsonl"))
         source = layers
         missing_ok = True
     else:
-        with open(last_untraced, "w") as f:
-            json.dump(values, f)
         source = values
         missing_ok = False
     metrics = {}

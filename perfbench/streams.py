@@ -1,7 +1,7 @@
-"""What the two streaming workloads share: the recording Kinesis client,
-the ``foreachBatch`` wrapper that times each micro-batch, decoding of the
-delivered records, and the per-trigger numbers read from
-``StreamingQueryProgress``."""
+"""Streaming instruments of the ``ingest`` workload: the recording Kinesis
+client, the ``foreachBatch`` wrapper that times each micro-batch, decoding
+of the delivered records, the per-trigger numbers read from
+``StreamingQueryProgress``, and the direct timing of the framing kernel."""
 
 from __future__ import annotations
 
@@ -31,11 +31,22 @@ class RecordingClient:
         self.puts: list[tuple[float, str, str]] = []
         self.put_s = 0.0
         self.corrupt_put: int | None = None  # self-test hook: mangle one put
+        # self-test hook: seconds each event of a put takes, which puts the
+        # offered rate above the pipeline's capacity; ``release`` ends it
+        self.delay_per_event_s = 0.0
+        self.released = False
+
+    def release(self) -> None:
+        self.released = True
 
     def put_record(self, stream, partition_key, data, sequence_number_for_ordering=None):
         wall = time.time()
         if self.corrupt_put is not None and len(self.puts) == self.corrupt_put:
             data = data.replace("TSCH", "TSCX", 1)
+        if self.delay_per_event_s:
+            until = time.perf_counter() + self.delay_per_event_s * len(json.loads(data))
+            while not self.released and time.perf_counter() < until:
+                time.sleep(0.01)
         with self.tracer.span("sinks.put"):
             t0 = time.perf_counter()
             resp = self.inner.put_record(
@@ -197,7 +208,7 @@ def layer_metrics(
 
 def kernel_us_per_event(archive, n_chunks: int = KERNEL_SAMPLE_CHUNKS) -> float:
     """Time ``framing.frame_batch`` called directly on the first
-    ``n_chunks`` chunks of a replay archive (``datagen.replay_archive``),
+    ``n_chunks`` chunks of a seeded archive (``datagen.chunk_archive``),
     one call per key, per framed message."""
     from trike_spark.streaming.framing import frame_batch
 

@@ -6,7 +6,8 @@ Each case runs ``perfbench/run.py`` end to end (Spark start-up included,
 so the whole file takes a few minutes) and checks its contract: the last
 stdout line is one JSON object with ``correct``, ``attempted``, ``failed``
 and ``metrics``, every metric named in ``BENCHMARK.json`` is printed with
-its unit, and output verification catches a corrupted record.
+its unit, output verification catches a corrupted record, and the ingest
+backlog guard fails a run whose offered rate is above capacity.
 """
 
 from __future__ import annotations
@@ -20,8 +21,8 @@ import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SPEC = json.load(open(os.path.join(ROOT, "BENCHMARK.json")))
-# every workload run.py accepts, including any the benchmark does not time
-WORKLOADS = ["ingest", "replay", "queries"]
+WORKLOADS = [w["name"] for w in SPEC["workloads"]]
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 
 
 def bench(workload: str, *extra: str, trace: int = 0) -> tuple[dict, dict]:
@@ -65,6 +66,29 @@ def test_verification_catches_a_corrupted_record(workload):
     _, result = bench(workload, "--corrupt")
     assert not result["correct"]
     assert result["failed"] >= 1
+
+
+def test_backlog_guard_fails_a_rate_above_capacity():
+    """A sink slowed to below the offered rate makes every trigger longer
+    than the last: the run must count as failed, not report a latency."""
+    info, result = bench("ingest", "--put-delay-ms", "2")
+    assert info["backlog_growing"]
+    assert not result["correct"]
+    assert result["failed"] == result["attempted"] >= 1
+
+
+def test_lag_trend_separates_backlog_from_noise():
+    from ingest import GROWTH_LIMIT, lag_growth
+
+    ends = [7.5 * i for i in range(6)]
+    steady = [7400, 8100, 7600, 7900, 7300, 8000]
+    assert abs(lag_growth(ends, steady)) < GROWTH_LIMIT
+    # one trigger 40% slower than the rest is not a backlog
+    assert lag_growth(ends[:4], [7500, 7500, 7500, 10500]) < GROWTH_LIMIT
+    # a lag that rises 20% per batch is
+    assert lag_growth(ends[:4], [7500 * 1.2**i for i in range(4)]) > GROWTH_LIMIT
+    # too few batches to fit a trend count as a backlog
+    assert lag_growth(ends[:2], steady[:2]) > GROWTH_LIMIT
 
 
 def test_bare_checkout_fails_without_a_result(tmp_path):
