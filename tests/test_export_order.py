@@ -1,18 +1,14 @@
-"""Invariants of the rotated, family-interleaved driver export order.
+"""Invariants of the family-interleaved driver export order.
 
-See docs/QUERY_ORDER.md: the driver verifies only the first 50 exported
-names (sorted), so exports are ranked family-interleaved with
-previously-driver-verified names (trike_spark/driver_history.py) rotated
-behind never-verified ones. These tests pin the properties the scheme
+See docs/QUERY_ORDER.md: the driver verifies only the first N exported
+names (sorted), so exports are ranked round-robin across families (the
+module a query registers from). These tests pin the properties the scheme
 promises, so registry growth can't silently break them.
 """
 
 from __future__ import annotations
 
-from trike_spark.driver_history import DRIVER_VERIFIED
 from trike_spark.registry import REGISTRY, interleaved_export_names, load_all_query_modules
-
-DRIVER_WINDOW = 50
 
 
 def _stripped(export_name: str) -> str:
@@ -35,25 +31,8 @@ def test_sorted_order_equals_rank_order() -> None:
     assert ranks == list(range(len(exports)))
 
 
-def test_window_prefers_never_driver_verified() -> None:
+def test_first_exports_cover_every_family() -> None:
     mapping = interleaved_export_names()
-    exports = sorted(mapping.values())
-    unverified_total = sum(1 for n in mapping if n not in DRIVER_VERIFIED)
-    head = exports[: min(DRIVER_WINDOW, unverified_total)]
-    assert all(_stripped(e) not in DRIVER_VERIFIED for e in head)
-    # Every previously-verified query is still exported (rotated, not removed).
-    assert DRIVER_VERIFIED <= set(mapping)
-
-
-def test_window_is_family_balanced() -> None:
-    mapping = interleaved_export_names()
-    exports = sorted(mapping.values())
-    fresh_families = {
-        REGISTRY[n].fn.__module__ for n in mapping if n not in DRIVER_VERIFIED
-    }
-    window_families = {
-        REGISTRY[_stripped(e)].fn.__module__ for e in exports[:DRIVER_WINDOW]
-    }
-    # Any first-50 window must touch every family that still has
-    # never-verified queries (there are far fewer families than 50).
-    assert fresh_families <= window_families
+    families = {spec.fn.__module__ for spec in REGISTRY.values()}
+    head = sorted(mapping.values())[: len(families)]
+    assert {REGISTRY[_stripped(e)].fn.__module__ for e in head} == families

@@ -5,11 +5,16 @@ from __future__ import annotations
 
 import json
 import time
+from datetime import datetime
+
+import pandas as pd
+import pytest
 
 from trike_spark.streaming.framing import (
     CHUNK_SCHEMA,
     EOT,
     extract,
+    frame_and_session,
     framed_stream,
 )
 
@@ -42,8 +47,6 @@ class TestExtract:
 
 
 def _chunk_rows(*chunks: tuple[str, str]) -> list[tuple]:
-    from datetime import datetime
-
     t = datetime(2021, 8, 13, 12, 0, 0)
     return [(conn, chunk, t, i) for i, (conn, chunk) in enumerate(chunks)]
 
@@ -101,3 +104,64 @@ def test_framed_stream_batchlike(spark, tmp_path):
         q.stop()
     msgs = sorted((r["conn_id"], r["raw"]) for r in out if r["kind"] == "message")
     assert msgs == [("a", MSG1), ("a", MSG2)]  # b's partial stays buffered
+
+
+class _GroupState:
+    """Just enough of pyspark's GroupState for frame_and_session."""
+
+    hasTimedOut = False
+
+    def __init__(self):
+        self.value = None
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, v):
+        self.value = v
+
+    def setTimeoutDuration(self, ms):
+        pass
+
+
+def _chunks(*rows: tuple[str, int]) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "conn_id": "a",
+            "chunk": [chunk for chunk, _ in rows],
+            "arrival_ts": datetime(2021, 8, 13, 12, 0, 0),
+            "arrival_seq": [seq for _, seq in rows],
+        }
+    )
+
+
+def _framed(*pdfs: pd.DataFrame) -> list[str]:
+    out = frame_and_session(("a",), iter(pdfs), _GroupState(), 60_000)
+    return [raw for pdf in out for raw in pdf.loc[pdf["kind"] == "message", "raw"]]
+
+
+def test_duplicate_arrival_seq_fails_loudly():
+    """A duplicate (conn_id, arrival_seq) pair means the source's order
+    signal has ties (the dev socket source stamps at millisecond
+    resolution), so the stitch order — hence the reassembled frame — is
+    arbitrary. Framing must refuse loudly rather than emit a possibly
+    corrupted message."""
+    with pytest.raises(ValueError, match="duplicate arrival_seq"):
+        _framed(_chunks((MSG1[:10], 7), (MSG1[10:] + EOT, 7)))
+    # unique seqs on the same payload still frame fine (control)
+    assert _framed(_chunks((MSG1[:10], 7), (MSG1[10:] + EOT, 8))) == [MSG1]
+
+
+def test_cross_chunk_order_restored_before_stitch():
+    """Arrow may deliver one key's micro-batch as SEVERAL chunks in
+    arbitrary order; framing must sort the CONCATENATION by arrival_seq (a
+    per-chunk sort would stitch later bytes first and corrupt the frame
+    silently). Deliver the later half of a split frame first."""
+    second_half = _chunks((MSG1[10:] + EOT, 8))
+    first_half = _chunks((MSG1[:10], 3))
+    assert _framed(second_half, first_half) == [MSG1]

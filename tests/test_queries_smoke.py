@@ -77,27 +77,6 @@ def test_query_runs(spark, name):
     df.limit(5).collect()  # executes
 
 
-def test_driver_history_names_exist():
-    """Every transcribed driver-history name must be a real registry name —
-    a transcription typo would silently mis-rotate the driver window."""
-    from trike_spark.driver_history import DRIVER_VERIFIED, WINDOW_PRIORITY
-
-    names = set(REGISTRY)
-    assert DRIVER_VERIFIED <= names, DRIVER_VERIFIED - names
-    assert WINDOW_PRIORITY <= names, WINDOW_PRIORITY - names
-
-
-def test_window_priority_names_rank_inside_driver_window():
-    """The 50-entry driver window must contain every stale re-verification
-    and verdict-priority name (QUERY_ORDER.md round-4 rotation contract)."""
-    from trike_spark.driver_history import WINDOW_PRIORITY
-    from trike_spark.registry import interleaved_export_names
-
-    exp = interleaved_export_names()
-    window = {n for n, _ in sorted(exp.items(), key=lambda kv: kv[1])[:50]}
-    assert WINDOW_PRIORITY <= window, WINDOW_PRIORITY - window
-
-
 def test_operator_docs_current():
     """docs/OPERATORS.md (the generated operator index) must match the
     registry exactly — same enforcement as the README census."""

@@ -87,46 +87,22 @@ def _interleave(families: dict[str, list[str]]) -> list[str]:
 def interleaved_export_names() -> dict[str, str]:
     """Map registry name → driver-facing export name.
 
-    The round-1 driver verified only the first 50 exported names in sorted
-    order, which (with plain names) was an alphabetical window that never
-    reached whole operator families (windows, set ops, text, vectors, …).
-    To make ANY first-N window cover every family, exports are renamed to
-    ``{rank:02d}_{name}`` where rank round-robins across families (module of
-    registration). Sorted order == interleaved order, so a driver that sorts
-    or one that takes dict order sees the same family-balanced sequence.
-
-    Round 3 adds *rotation*: names already hard-verified by a past driver
-    round (:data:`trike_spark.driver_history.DRIVER_VERIFIED`) sort behind
-    never-verified ones — two interleave passes, unverified families first —
-    so each round's capped window verifies fresh queries and driver coverage
-    accumulates across rounds. Rotation only permutes export rank; every
-    query keeps its name, semantics, and oracle. Documented in
-    docs/QUERY_ORDER.md.
+    The driver verifies only the first N exported names in sorted order,
+    which (with plain names) was an alphabetical window that never reached
+    whole operator families (windows, set ops, text, vectors, …). To make
+    ANY first-N window cover every family, exports are renamed to
+    ``{rank:0Nd}_{name}`` where rank round-robins across families (module of
+    registration); within a family, oracle-backed names come before
+    rows-only ones (a capped window should check hashes, not just row
+    counts), then alphabetical. Sorted order == interleaved order, so
+    a driver that sorts or one that takes dict order sees the same
+    family-balanced sequence. Documented in docs/QUERY_ORDER.md.
     """
     load_all_query_modules()
-    from trike_spark.driver_history import DRIVER_VERIFIED, WINDOW_PRIORITY
-
-    prio: dict[str, list[str]] = {}
-    fresh: dict[str, list[str]] = {}
-    seen: dict[str, list[str]] = {}
-    # Three tiers, each family-interleaved: verdict-priority names first
-    # (they must ALL land inside the 50-entry window even when one family
-    # holds many of them), then the remaining never-verified names, then
-    # the rotated already-verified tail. Within a family: oracle-backed
-    # before rows-only (a capped driver window should verify hashes, not
-    # just row counts), then alphabetical.
-    for name in sorted(
-        REGISTRY,
-        key=lambda n: (REGISTRY[n].oracle is None, n),
-    ):
-        if name in DRIVER_VERIFIED:
-            bucket = seen
-        elif name in WINDOW_PRIORITY:
-            bucket = prio
-        else:
-            bucket = fresh
-        bucket.setdefault(REGISTRY[name].fn.__module__, []).append(name)
-    ordered = _interleave(prio) + _interleave(fresh) + _interleave(seen)
+    families: dict[str, list[str]] = {}
+    for name in sorted(REGISTRY, key=lambda n: (REGISTRY[n].oracle is None, n)):
+        families.setdefault(REGISTRY[name].fn.__module__, []).append(name)
+    ordered = _interleave(families)
     width = max(2, len(str(len(ordered) - 1)))
     return {name: f"{rank:0{width}d}_{name}" for rank, name in enumerate(ordered)}
 

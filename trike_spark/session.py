@@ -107,35 +107,6 @@ def get_spark(app_name: str = "trike_spark", config: EngineConfig | None = None)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
-        # Optimization-guide §9 knobs, env-parameterized so cluster
-        # deployments can flip them without code changes.
-        # preferSortMergeJoin stays TRUE by default: SMJ spills, a
-        # shuffled-hash build side must fit task memory — the safe
-        # default for 100 TB fact-fact joins; flip per-job where the
-        # build side provably fits (measurement in OPTIMIZATION_r10.md).
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_PREFER_SMJ", "true"),
-        )
-        # AQE target for post-shuffle partition size: 64m default keeps
-        # local-mode partitions parallel; production guidance is 256m
-        # (guide §9) via env, scaling reducer counts with data, not code.
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_ADVISORY_PARTITION_BYTES", "64m"),
-        )
-        # Shuffle/spill codec (guide §2.3/§9 "measure both"): default stays
-        # Spark's lz4 — the r10 interleaved A/B on the five heaviest-
-        # shuffle faces split 3-2 with the two largest deltas cancelling
-        # (numbers in OPTIMIZATION_r10.md): no consistent local winner,
-        # because local[] shuffles never cross a NIC, so zstd's ratio win
-        # buys nothing here while its CPU cost shows on label-pair-heavy
-        # shuffles. A 100 TB deployment shuffling over real networks
-        # should re-measure with SPARK_IO_COMPRESSION=zstd.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_IO_COMPRESSION", "lz4"),
-        )
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.ui.showConsoleProgress", "false")
         # In local[] mode the driver JVM IS the executor: all task memory,

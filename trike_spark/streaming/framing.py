@@ -114,9 +114,8 @@ def sorted_key_batch(conn_id: str, pdfs: Iterable[pd.DataFrame]) -> pd.DataFrame
 def frame_batch(
     conn_id: str, batch: pd.DataFrame, buffer: str, nseq: int
 ) -> tuple[pd.DataFrame | None, str, int]:
-    """Vectorized framing of one key's sorted micro-batch — the shared
-    kernel of both stateful twins (applyInPandasWithState and
-    transformWithState). Equivalent to the per-chunk loop
+    """Vectorized framing of one key's sorted micro-batch — the kernel of
+    the applyInPandasWithState operator. Equivalent to the per-chunk loop
 
         for chunk, ts: messages, buffer = extract(buffer + chunk); emit …
 

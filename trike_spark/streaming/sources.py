@@ -46,7 +46,7 @@ def socket_chunk_stream(spark: SparkSession, host: str = "localhost", port: int 
     production uses the Kinesis shard sequence number, which is exact).
     Ties no longer corrupt silently: framing raises on a duplicate
     (conn_id, arrival_seq) pair, so a same-ms tie fails the query loudly
-    (tests/test_framing_tws.py::test_duplicate_arrival_seq_fails_loudly_both_twins).
+    (tests/test_framing.py::test_duplicate_arrival_seq_fails_loudly).
     Consequence: two lines read inside one millisecond KILL a query fed
     by this adapter — deliberately, because the alternative is a
     possibly-corrupted frame. Sender-side pacing CANNOT prevent this:
