@@ -94,3 +94,57 @@ def test_partial_frame_survives_restart(spark, tmp_path):
         assert len(msgs) == 2
     finally:
         q2.stop()
+
+
+def _state_store_instances(q, timeout=30):
+    """State-store instance counts over the query's progress reports; the
+    report of a batch can trail its sink output, so wait for one."""
+    deadline = time.time() + timeout
+    while True:
+        counts = [
+            op.numStateStoreInstances
+            for p in q.recentProgress
+            for op in p.stateOperators
+        ]
+        if counts or time.time() > deadline:
+            return counts
+        time.sleep(0.5)
+
+
+def test_checkpoint_keeps_partition_count_across_conf_change(spark, tmp_path):
+    """A checkpoint created under 8 shuffle partitions restarts under a
+    session set to 4 with its 8 state stores (Spark pins the count in the
+    offset log), and the partial frame buffered in one of them stitches.
+    So a new default partition count is safe to deploy over live
+    checkpoints."""
+    src = tmp_path / "in"
+    src.mkdir()
+    ckpt = tmp_path / "ckpt"
+    out = tmp_path / "out"
+    half1, half2 = MSG[:12], MSG[12:]
+    orig = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        _write(src, "c1.json", "conn-1", MSG + EOT + half1, 0)
+        q1 = _start(spark, src, ckpt, out)
+        try:
+            _poll(spark, q1, out, lambda rows: any(r["raw"] == MSG for r in rows))
+            assert set(_state_store_instances(q1)) == {8}
+        finally:
+            q1.stop()
+
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        _write(src, "c2.json", "conn-1", half2 + EOT, 1)
+        q2 = _start(spark, src, ckpt, out)
+        try:
+            rows = _poll(
+                spark, q2, out,
+                lambda rows: sum(1 for r in rows if r["raw"] == MSG) >= 2,
+            )
+            assert sum(1 for r in rows if r["raw"] == MSG) == 2
+            assert set(_state_store_instances(q2)) == {8}
+            assert q2.lastProgress.stateOperators[0].numStateStoreInstances == 8
+        finally:
+            q2.stop()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", orig)

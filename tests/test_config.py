@@ -44,3 +44,27 @@ def test_local_cluster_memory_guard(monkeypatch):
         _check_local_cluster_memory("local-cluster[2,8]")
     monkeypatch.setenv("SPARK_EXECUTOR_MEMORY", "2g")
     _check_local_cluster_memory("local-cluster[2,8,4096]")  # now fits
+
+
+def test_shuffle_partitions_follow_task_slots(monkeypatch):
+    """One shuffle partition (so one framing state store) per task slot of
+    the master; SPARK_SHUFFLE_PARTITIONS overrides; a master whose slots
+    are unknown leaves the conf to the deployment."""
+    import os
+
+    monkeypatch.delenv("SPARK_SHUFFLE_PARTITIONS", raising=False)
+    cores = len(os.sched_getaffinity(0))
+    cases = {
+        "local[3]": 3,
+        "local[3,2]": 3,
+        "local[*]": cores,
+        "local-cluster[2,3,8192]": 6,
+        "spark://head:7077": None,
+    }
+    for master, slots in cases.items():
+        assert EngineConfig(master=master).shuffle_partitions == slots, master
+    monkeypatch.setenv("SPARK_SHUFFLE_PARTITIONS", "7")
+    for master in cases:
+        assert EngineConfig(master=master).shuffle_partitions == 7, master
+    # an explicit count beats both
+    assert EngineConfig(master="local[3]", shuffle_partitions=5).shuffle_partitions == 5

@@ -13,12 +13,17 @@ def test_health_listener_logs_progress(spark, tmp_path, caplog):
     caplog.set_level(logging.INFO, logger="trike_spark.health")
     listener = HealthListener()
     spark.streams.addListener(listener)
-    chunks = fake_chunk_stream(spark, rows_per_second=10)
+    # a stateful query, so the state keys carry real values
+    counts = fake_chunk_stream(spark, rows_per_second=10).groupBy("conn_id").count()
+    partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     q = (
-        chunks.writeStream.format("memory")
+        counts.writeStream.format("memory")
         .queryName("health_probe")
-        .outputMode("append")
+        .outputMode("complete")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
+        # one batch, then idle: stop() must not kill a stateful batch
+        # mid state-store commit
+        .trigger(processingTime="1 hour")
         .start()
     )
     try:
@@ -35,3 +40,5 @@ def test_health_listener_logs_progress(spark, tmp_path, caplog):
     health = [m for m in msgs if m.startswith("health batch_id=")]
     assert health, msgs
     assert "rows_per_sec=" in health[0] and "batch_duration_ms=" in health[0]
+    assert f"state_store_instances={partitions} " in health[0], health[0]
+    assert "state_commit_ms=" in health[0], health[0]

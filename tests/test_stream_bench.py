@@ -53,5 +53,7 @@ def test_stream_bench_emits_contract_json(sink):
     assert payload["micro_batches"] >= 3
     assert payload["connections"] == 4
     assert payload["sink"] == sink
+    assert isinstance(payload["shuffle_partitions"], int)
+    assert payload["shuffle_partitions"] > 0
     assert payload["batch_gap_p50_sec"] >= 0
     assert payload["batch_gap_p95_sec"] >= payload["batch_gap_p50_sec"]

@@ -106,6 +106,9 @@ def main() -> None:
     from trike_spark.streaming.sources import fake_chunk_stream
 
     spark = get_spark("stream-bench")
+    # one stateful task per shuffle partition each trigger: rows taken
+    # under different counts are not comparable
+    shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     put_sleep = args.put_latency_ms / 1e3
 
     def _with_latency(client):
@@ -281,6 +284,7 @@ def main() -> None:
                 "sink": args.sink,
                 "put_latency_ms": args.put_latency_ms,
                 "master": args.master or "local[default]",
+                "shuffle_partitions": shuffle_partitions,
                 "counting": (
                     "driver-decoded (exact)"
                     if args.sink == "driver"

@@ -7,6 +7,16 @@ single JVM) but every knob is env-overridable so the same code deploys to a
 1000-executor cluster by changing config only, never code. AQE is on so
 shuffle partition counts, skew joins, and broadcast decisions re-plan at
 runtime from real statistics.
+
+Shuffle partitions follow one rule: one partition per task slot of the
+master the session is built on (``local[N]``/``local[N,F]`` → N,
+``local[*]`` → the CPUs this process may run on, ``local-cluster[n,c,m]``
+→ n·c). Any other master leaves ``spark.sql.shuffle.partitions`` to the
+deployment, and ``SPARK_SHUFFLE_PARTITIONS`` overrides the rule. The count
+matters most inside a stream, where Spark turns AQE off: the framing
+operator keeps one state store per shuffle partition, so every trigger
+runs (and commits) that many stateful tasks. A running query keeps the
+count its checkpoint was created with.
 """
 
 from __future__ import annotations
@@ -16,6 +26,22 @@ import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
+
+_LOCAL_CLUSTER = re.compile(r"local-cluster\[\s*(\d+)\s*,\s*(\d+)\s*,\s*(\d+)\s*\]")
+_LOCAL = re.compile(r"local(?:\[\s*(\d+|\*)\s*(?:,\s*\d+\s*)?\])?")
+
+
+def task_slots(master: str) -> int | None:
+    """Tasks the master runs at once: ``local`` → 1, ``local[N]`` and
+    ``local[N,F]`` → N, ``local[*]`` → the CPUs this process may run on,
+    ``local-cluster[n,c,m]`` → n·c. None for any other master, whose size
+    only the deployment knows."""
+    if m := _LOCAL_CLUSTER.fullmatch(master):
+        return int(m.group(1)) * int(m.group(2))
+    if m := _LOCAL.fullmatch(master):
+        n = m.group(1) or "1"
+        return len(os.sched_getaffinity(0)) if n == "*" else int(n)
+    return None
 
 
 @dataclass(frozen=True)
@@ -29,9 +55,9 @@ class EngineConfig:
             "SPARK_MASTER", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
         )
     )
-    shuffle_partitions: int = field(
-        default_factory=lambda: int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
-    )
+    # None: one partition per task slot of ``master`` (see task_slots);
+    # still None for a master whose slots are unknown
+    shuffle_partitions: int | None = None
     # trike's stale connection timeout (reference config/config.exs:19)
     stale_timeout_ms: int = field(
         default_factory=lambda: int(os.environ.get("STALE_TIMEOUT_MS", "300000"))
@@ -51,6 +77,12 @@ class EngineConfig:
         )
     )
 
+    def __post_init__(self) -> None:
+        if self.shuffle_partitions is None:
+            env = os.environ.get("SPARK_SHUFFLE_PARTITIONS")
+            slots = int(env) if env else task_slots(self.master)
+            object.__setattr__(self, "shuffle_partitions", slots)
+
 
 def _heap_mb(spec: str) -> int:
     """JVM memory string ('8g', '4096m', '512k', bare MB count) → MB."""
@@ -67,13 +99,13 @@ def _check_local_cluster_memory(master: str) -> None:
     job HANGS with no diagnostic (observed under the stream bench). The
     master string sizes the WORKER; the executor still launches at
     spark.executor.memory — both knobs must agree."""
-    m = re.fullmatch(r"local-cluster\[\s*\d+\s*,\s*\d+\s*,\s*(\d+)\s*\]", master)
+    m = _LOCAL_CLUSTER.fullmatch(master)
     if not m:
         raise ValueError(
             f"malformed local-cluster master {master!r} "
             "(expected local-cluster[n,cores,memoryMB])"
         )
-    worker_mb = int(m.group(1))
+    worker_mb = int(m.group(3))
     executor_mb = _heap_mb(os.environ.get("SPARK_EXECUTOR_MEMORY", "8g"))
     if worker_mb < executor_mb:
         raise ValueError(
@@ -88,6 +120,10 @@ def get_spark(app_name: str = "trike_spark", config: EngineConfig | None = None)
     """Build (or fetch) the SparkSession.
 
     Settings that matter at 100 TB:
+      * One shuffle partition per task slot of ``cfg.master`` (left unset
+        for a master whose slots are unknown; ``SPARK_SHUFFLE_PARTITIONS``
+        overrides). AQE coalesces batch shuffles from there; streams run
+        with AQE off, so their stateful and sink shuffles keep this count.
       * AQE + skew-join handling: runtime re-planning from observed stats.
       * autoBroadcastJoinThreshold stays default (10 MiB) — dimension tables
         (region/nation/supplier) broadcast automatically; we additionally
@@ -100,7 +136,6 @@ def get_spark(app_name: str = "trike_spark", config: EngineConfig | None = None)
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -118,6 +153,8 @@ def get_spark(app_name: str = "trike_spark", config: EngineConfig | None = None)
         # and env-overridable either way.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
+    if cfg.shuffle_partitions is not None:
+        builder = builder.config("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
     # RocksDB state store: bounds streaming state memory at scale (millions
     # of live sessions) — the reference's unbounded per-process heap buffer
     # is its acknowledged risk (SURVEY §4.2). Env-gated; HDFS-backed default

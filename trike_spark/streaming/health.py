@@ -25,14 +25,19 @@ class HealthListener(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:
         p = event.progress
-        state_rows = sum(s.numRowsTotal for s in p.stateOperators) if p.stateOperators else 0
-        # keys mirror the reference's got_data/connection scan lines (O4)
+        ops = p.stateOperators or []
+        # keys mirror the reference's got_data/connection scan lines (O4);
+        # state_store_instances is the shuffle partition count the query's
+        # checkpoint pinned, and each instance commits every batch
         logger.info(
-            "health batch_id=%s rows_per_sec=%.1f batch_duration_ms=%s state_rows=%d",
+            "health batch_id=%s rows_per_sec=%.1f batch_duration_ms=%s state_rows=%d "
+            "state_store_instances=%d state_commit_ms=%d",
             p.batchId,
             p.processedRowsPerSecond or 0.0,
             p.durationMs.get("triggerExecution") if p.durationMs else None,
-            state_rows,
+            sum(s.numRowsTotal for s in ops),
+            sum(s.numStateStoreInstances for s in ops),
+            sum(s.commitTimeMs for s in ops),
         )
 
     def onQueryTerminated(self, event) -> None:
