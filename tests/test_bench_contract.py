@@ -10,6 +10,8 @@ import os
 import subprocess
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_bench_emits_one_json_line_with_contract_keys():
     env = dict(os.environ)
@@ -21,7 +23,7 @@ def test_bench_emits_one_json_line_with_contract_keys():
         }
     )
     out = subprocess.run(
-        [sys.executable, "/root/repo/bench.py"],
+        [sys.executable, os.path.join(ROOT, "bench.py")],
         capture_output=True,
         text=True,
         timeout=300,

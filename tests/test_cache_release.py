@@ -38,3 +38,29 @@ def test_cc_star_checkpoints_released(spark):
     connected_components_star(edges).collect()
     release_checkpoints()
     assert _persistent_rdd_count(spark) <= base
+
+
+def test_bfs_frees_superseded_generations(spark):
+    """Each BFS round frees the visited set and frontier it supersedes, so
+    the cached blocks the loop leaves live do not grow with the hop count.
+    Counted as new persistent-RDD ids, which other tests' RDDs being
+    garbage-collected meanwhile cannot shift."""
+    from trike_spark.cache import _persistent_ids
+    from trike_spark.queries.graph_analytics import _bfs
+
+    edges = spark.createDataFrame(
+        [(u, v) for a, b in [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")]
+         for u, v in ((a, b), (b, a))],
+        "src string, dst string",
+    )
+    seed = spark.createDataFrame([("a", 0)], "node string, dist int")
+
+    def live_after(hops: int) -> int:
+        release_checkpoints()
+        base = _persistent_ids(spark)
+        visited = _bfs(edges, seed, hops)
+        assert sorted(r.dist for r in visited.collect()) == list(range(hops + 1))
+        return len(_persistent_ids(spark) - base)
+
+    assert live_after(3) == live_after(1) == 1  # the returned visited set
+    release_checkpoints()

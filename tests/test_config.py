@@ -1,28 +1,9 @@
-"""Config precedence contract — trike's compile-default → env layering
-(reference config/config.exs:15-21, config/runtime.exs:51-65; behavior O3)."""
+"""Session config: the local-cluster memory guard and the shuffle-partition
+rule with its env and explicit overrides."""
 
 from __future__ import annotations
 
 from trike_spark.session import EngineConfig
-
-
-def test_defaults_match_reference(monkeypatch):
-    for var in ("STALE_TIMEOUT_MS", "KINESIS_STREAM", "OCS_HEARTBEAT"):
-        monkeypatch.delenv(var, raising=False)
-    cfg = EngineConfig()
-    assert cfg.stale_timeout_ms == 300_000  # config.exs:19
-    assert cfg.heartbeat == "HEARTBEAT"  # config.exs:21
-    assert cfg.kinesis_stream == "console"  # runtime.exs:11-15 fake default
-
-
-def test_env_overrides(monkeypatch):
-    monkeypatch.setenv("STALE_TIMEOUT_MS", "1234")
-    monkeypatch.setenv("KINESIS_STREAM", "prod-stream")
-    monkeypatch.setenv("OCS_HEARTBEAT", "PING")
-    cfg = EngineConfig()
-    assert cfg.stale_timeout_ms == 1234
-    assert cfg.kinesis_stream == "prod-stream"
-    assert cfg.heartbeat == "PING"
 
 
 def test_local_cluster_memory_guard(monkeypatch):

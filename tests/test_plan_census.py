@@ -10,19 +10,21 @@ the same diff, where the reviewer sees it."""
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
-from plan_census import SF_DIR, census_for  # noqa: E402
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "tools"))
+from plan_census import OUT, SF_DIR, census_for  # noqa: E402
 
 from trike_spark.cache import release_checkpoints
 from trike_spark.registry import REGISTRY, load_all_query_modules
 
 load_all_query_modules()
 
-with open("/root/repo/docs/PLAN_CENSUS.json") as f:
+with open(OUT) as f:
     BASELINE = json.load(f)
 
 # counts where MORE is a regression ("gwin" = unpartitioned windows: the

@@ -710,10 +710,14 @@ def test_filtered_topk_pushes_label_and_takeordered(spark):
 # --- gwin allowlist: every unpartitioned window consumes a bounded input ------
 
 import json
+import os
 
 import pytest
 
-with open("/root/repo/docs/PLAN_CENSUS.json") as _f:
+_CENSUS_PATH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "docs", "PLAN_CENSUS.json"
+)
+with open(_CENSUS_PATH) as _f:
     _CENSUS = json.load(_f)
 _GWIN_NAMES = sorted(n for n, v in _CENSUS.items() if v.get("gwin", 0) > 0)
 

@@ -5,10 +5,13 @@ round notes and future drivers consume)."""
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
 import pytest
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.mark.parametrize("sink", ["driver", "distributed"])
@@ -25,7 +28,7 @@ def test_stream_bench_emits_contract_json(sink):
         out = subprocess.run(
             [
                 sys.executable,
-                "/root/repo/tools/stream_bench.py",
+                os.path.join(ROOT, "tools", "stream_bench.py"),
                 "--rows-per-second",
                 "1500",
                 "--duration",

@@ -10,10 +10,12 @@ census is enforced.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections import defaultdict
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def render() -> str:
@@ -50,7 +52,7 @@ def render() -> str:
 
 
 def main() -> None:
-    out = "/root/repo/docs/OPERATORS.md"
+    out = os.path.join(ROOT, "docs", "OPERATORS.md")
     with open(out, "w") as f:
         f.write(render())
     print(f"wrote {out}")

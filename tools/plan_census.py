@@ -14,12 +14,14 @@ surprises. Regenerate with:
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = "/root/testdata/sf0.001"
-OUT = "/root/repo/docs/PLAN_CENSUS.json"
+OUT = os.path.join(ROOT, "docs", "PLAN_CENSUS.json")
 
 
 def census_for(df) -> dict[str, int]:

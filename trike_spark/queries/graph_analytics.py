@@ -1,5 +1,7 @@
 """Graph analytics over the purchase graph (customers ↔ suppliers via
-orders⋈lineitem): fixed-point PageRank and a degree-distribution report.
+orders⋈lineitem) — PageRank, degrees, link prediction, LPA and its
+modularity, BFS, k-core, harmonic centrality — plus the near-duplicate
+graph's triangle census.
 
 The reference has no graph surface; these extend the LLM-data-pipeline set
 (web-graph-style quality signals — PageRank-weighted source scoring is the
@@ -10,9 +12,11 @@ ranks) with the same engine rules as everything else here:
     division everywhere): BIGINT sums are order-independent, so the
     iterative computation hash-matches the DuckDB oracle exactly — no
     float drift across engines, partitionings, or AQE re-plans.
-  * **Unrolled, bounded iterations** (3), each ONE join + ONE aggregation
-    on the same key — at 100 TB each round shuffles (node, score) pairs,
-    never adjacency lists; the edge set is computed once and reused.
+  * **Unrolled, bounded rounds** of node-keyed joins and aggregations —
+    at 100 TB each round shuffles O(V) (node, value) pairs, never
+    adjacency lists. One builder makes the edge set (``_purchase_edges``),
+    which each face checkpoints once; ``_lpa_labels`` and ``_bfs`` hold
+    the LPA rounds and the BFS frontier loop.
   * Degree buckets via an explicit power-of-two CASE chain — integer
     comparisons only, no log2 float round-off at bucket edges.
 """
@@ -34,16 +38,41 @@ PR_BASE = 15 * PR_SCALE // 100  # (1 - d) · SCALE with d = 0.85
 _DEG_BUCKETS = [1, 2, 4, 8, 16, 32, 64, 128, 256]
 
 
-def _sym_edges(e0: DataFrame, cnode: F.Column, snode: F.Column) -> DataFrame:
-    """Symmetrize the (customer, supplier) edge set with ONE reference to
-    ``e0``: explode a per-row two-struct array instead of
-    ``unionAll(e0.select(c→s), e0.select(s→c))``. Spark does not CSE
-    across union branches, so the union form evaluated the
-    orders⋈lineitem distinct subtree twice — with exchange reuse the
+def _purchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (customer, supplier) purchase pairs ``(c, s)`` from
+    orders⋈lineitem — the oracle's ``e0``."""
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    return (
+        orders.join(li, orders.o_orderkey == li.l_orderkey)
+        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
+        .distinct()
+    )
+
+
+def _purchase_edges(
+    spark: SparkSession, sf_dir: str, long_ids: bool = False
+) -> DataFrame:
+    """Symmetric purchase edges ``(src, dst)`` — the oracle's ``edges``.
+
+    Node ids are the oracle's 'c…'/'s…' strings, or with ``long_ids``
+    custkey·2 / suppkey·2+1: 8-byte keys for faces whose loops shuffle
+    and join node ids every round (the narrower-types move, guide §2.3).
+
+    Symmetrized with ONE reference to the pairs: explode a per-row
+    two-struct array instead of ``unionAll(select(c→s), select(s→c))``.
+    Spark does not CSE across union branches, so the union form evaluated
+    the orders⋈lineitem distinct subtree twice — with exchange reuse the
     shuffles dedup at runtime, but the post-exchange distinct aggregation
     and projection still ran once per branch. Identical directed-edge
     multiset either way (guide §2.4, the _grid_tag move)."""
-    return e0.select(
+    if long_ids:
+        cnode = F.col("c").cast("long") * 2
+        snode = F.col("s").cast("long") * 2 + 1
+    else:
+        cnode = F.concat(F.lit("c"), F.col("c").cast("string"))
+        snode = F.concat(F.lit("s"), F.col("s").cast("string"))
+    return _purchase_pairs(spark, sf_dir).select(
         F.explode(
             F.array(
                 F.struct(cnode.alias("src"), snode.alias("dst")),
@@ -112,29 +141,15 @@ def graph_pagerank_fixedpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(E) — and plan depth is constant per round. Symmetric edges make the
     graph non-bipartite so mass genuinely mixes across rounds (customers'
     ranks differ by purchase breadth, suppliers' by customer reach)."""
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-    )
-    # The loop runs on LONG node ids (custkey·2 / suppkey·2+1) instead of
-    # the output's "c…"/"s…" strings: every per-round shuffle and join then
-    # carries and compares 8-byte keys, not variable-length strings — the
-    # narrower-types move (guide §2.3) applied to the hottest column. The
-    # string form is reconstructed in the final projection only (a narrow
-    # map over O(V) rows), so the output is bit-identical.
-    cnode = (F.col("o_custkey").cast("long") * 2)
-    snode = (F.col("l_suppkey").cast("long") * 2 + 1)
-    edges = _sym_edges(e0, cnode, snode)
-    # One materialization feeds every round's join — without it the
-    # orders⋈lineitem distinct would recompute 2·ITERS+1 times. The
-    # out-degree rides INSIDE the checkpoint as a whole-partition window
-    # count (one shuffle, paid once) instead of a separate outdeg table
-    # joined back every round (ITERS extra joins of the full edge list).
+    # One materialization of the LONG-id edges (8-byte keys in every round's
+    # shuffles and joins; the strings return in the final projection only)
+    # feeds every round's join — without it the orders⋈lineitem distinct
+    # would recompute 2·ITERS+1 times. The out-degree rides INSIDE the
+    # checkpoint as a whole-partition window count (one shuffle, paid once)
+    # instead of a separate outdeg table joined back every round (ITERS
+    # extra joins of the full edge list).
     edges = cache.checkpoint(
-        edges.withColumn(
+        _purchase_edges(spark, sf_dir, long_ids=True).withColumn(
             "deg", F.count(F.lit(1)).over(Window.partitionBy("src"))
         )
     )
@@ -202,16 +217,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     power-of-two via an integer CASE chain (no float log2 at the bucket
     edges). Two aggregations, both keyed on node id / (kind, bucket);
     output is at most 2·(buckets+1) rows."""
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-    )
-    cnode = F.concat(F.lit("c"), F.col("o_custkey").cast("string"))
-    snode = F.concat(F.lit("s"), F.col("l_suppkey").cast("string"))
-    edges = _sym_edges(e0, cnode, snode)
+    edges = _purchase_edges(spark, sf_dir)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     return (
         deg.select(
@@ -268,14 +274,7 @@ def graph_common_neighbors_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     also sample within the cap, cf. the hot-bucket grid in the LSH
     kernel). One distinct, one keyed count, the capped pair join keyed on
     customer, a (pair) count, TakeOrdered top-k."""
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    e0 = cache.checkpoint(e0)
+    e0 = cache.checkpoint(_purchase_pairs(spark, sf_dir))
     deg = e0.groupBy("c").agg(F.count(F.lit(1)).alias("d"))
     kept = e0.join(deg.filter(F.col("d") <= CN_DEG_CAP), "c").select("c", "s")
     a = kept.alias("a")
@@ -441,6 +440,27 @@ def _sql_lpa_iter(prev: str, out: str) -> str:
     """
 
 
+def _lpa_labels(edges: DataFrame) -> DataFrame:
+    """``(node, label)`` after LPA_ITERS synchronous vote rounds from
+    identity labels; ties break to the smallest label (``_sql_lpa_iter``)."""
+    labels = edges.select(F.col("src").alias("node")).distinct().select(
+        "node", F.col("node").alias("label")
+    )
+    for _ in range(LPA_ITERS):
+        votes = (
+            edges.join(labels, edges.src == labels.node)
+            .groupBy("dst", "label")
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
+        w = Window.partitionBy("dst").orderBy(F.col("c").desc(), F.col("label"))
+        labels = (
+            votes.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select(F.col("dst").alias("node"), "label")
+        )
+    return labels
+
+
 @register(
     "graph_label_propagation",
     f"""
@@ -472,36 +492,10 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     convergence-looped: LPA oscillates on bipartite structure (this
     purchase graph IS bipartite), so production runs fix the round budget
     — exactly what the unrolled oracle verifies."""
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-    )
-    cnode = F.concat(F.lit("c"), F.col("o_custkey").cast("string"))
-    snode = F.concat(F.lit("s"), F.col("l_suppkey").cast("string"))
-    edges = _sym_edges(e0, cnode, snode)
-    edges = cache.checkpoint(edges)
-    labels = edges.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    )
-    from pyspark.sql import Window
-
-    for _ in range(LPA_ITERS):
-        votes = (
-            edges.join(labels, edges.src == labels.node)
-            .groupBy("dst", "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        w = Window.partitionBy("dst").orderBy(F.col("c").desc(), F.col("label"))
-        labels = (
-            votes.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(F.col("dst").alias("node"), "label")
-        )
+    edges = cache.checkpoint(_purchase_edges(spark, sf_dir))
     return (
-        labels.groupBy("label")
+        _lpa_labels(edges)
+        .groupBy("label")
         .agg(F.count(F.lit(1)).alias("n_members"))
         .orderBy("label")
     )
@@ -511,6 +505,37 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BFS_SEED = "c1"  # customer node 'c' + custkey 1 exists at every SF
 BFS_HOPS = 3
+
+
+def _bfs(edges: DataFrame, visited: DataFrame, hops: int) -> DataFrame:
+    """Grow ``visited`` — the seed rows, keyed by every column but
+    ``dist`` (one key is ``node``) — by ``hops`` frontier rounds over
+    ``edges``. Each round checkpoints the newly reached rows and the grown
+    visited set, then frees the generation they supersede; the last
+    frontier is freed too, so the returned visited set is the only
+    checkpoint the loop leaves, whatever the hop count."""
+    keys = [c for c in visited.columns if c != "dist"]
+    carried = [c for c in keys if c != "node"]
+    new = visited
+    for k in range(1, hops + 1):
+        frontier = new.select(*keys)
+        nxt = (
+            edges.join(frontier, edges.src == frontier.node)
+            .select(*carried, F.col("dst").alias("node"))
+            .distinct()
+        )
+        reached = cache.checkpoint(
+            nxt.join(visited, keys, "left_anti").select(
+                *keys, F.lit(k).cast("int").alias("dist")
+            )
+        )
+        grown = cache.checkpoint(visited.unionByName(reached))
+        cache.release(visited)
+        cache.release(new)
+        visited, new = grown, reached
+    if new is not visited:
+        cache.release(new)
+    return visited
 
 
 @register(
@@ -548,34 +573,9 @@ def graph_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     and PageRank loops). Hop count is bounded (unrolled), which is how a
     production k-hop query should run — unbounded BFS on a 100 TB graph
     is a different algorithm (CC), not a bigger loop."""
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-    )
-    cnode = F.concat(F.lit("c"), F.col("o_custkey").cast("string"))
-    snode = F.concat(F.lit("s"), F.col("l_suppkey").cast("string"))
-    edges = cache.checkpoint(
-        _sym_edges(e0, cnode, snode)
-    )
-    visited = spark.createDataFrame([(BFS_SEED, 0)], "node string, dist int")
-    frontier = visited.select("node")
-    for k in range(1, BFS_HOPS + 1):
-        nxt = (
-            edges.join(frontier, edges.src == frontier.node)
-            .select(F.col("dst").alias("node"))
-            .distinct()
-        )
-        new = cache.checkpoint(
-            nxt.join(visited, "node", "left_anti").select(
-                "node", F.lit(k).cast("int").alias("dist")
-            )
-        )
-        visited = cache.checkpoint(visited.unionByName(new))
-        frontier = new.select("node")
-    return visited.groupBy("dist").agg(
+    edges = cache.checkpoint(_purchase_edges(spark, sf_dir))
+    seed = spark.createDataFrame([(BFS_SEED, 0)], "node string, dist int")
+    return _bfs(edges, seed, BFS_HOPS).groupBy("dist").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_nodes")
     )
 
@@ -626,18 +626,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: degree table = one keyed count; the edge⨝degree joins
     key on node id (degree table broadcastable at |V| ≪ |E|); moments
     reduce to one row."""
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-    )
-    cnode = F.concat(F.lit("c"), F.col("o_custkey").cast("string"))
-    snode = F.concat(F.lit("s"), F.col("l_suppkey").cast("string"))
-    edges = cache.checkpoint(
-        _sym_edges(e0, cnode, snode)
-    )
+    edges = cache.checkpoint(_purchase_edges(spark, sf_dir))
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     ds = deg.select(F.col("src").alias("s_node"), F.col("d").alias("xd"))
     dd = deg.select(F.col("src").alias("d_node"), F.col("d").alias("yd"))
@@ -730,22 +719,9 @@ def graph_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded and unrolled — production k-core on a 100 TB graph fixes the
     round budget and reports the trajectory, exactly what this face emits
     (round → surviving nodes/edges)."""
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-    )
-    # Node ids stay LONG throughout (custkey·2 / suppkey·2+1): the face
-    # only ever outputs per-round COUNTS, so the "c…"/"s…" string encoding
-    # the shared oracle uses is pure per-round shuffle/compare overhead
-    # here — same node set, same degrees, same counts (guide §2.3).
-    cnode = (F.col("o_custkey").cast("long") * 2)
-    snode = (F.col("l_suppkey").cast("long") * 2 + 1)
-    edges = cache.checkpoint(
-        _sym_edges(e0, cnode, snode)
-    )
+    # LONG node ids: the face only outputs per-round COUNTS, so the
+    # oracle's "c…"/"s…" strings would be pure shuffle/compare overhead.
+    edges = cache.checkpoint(_purchase_edges(spark, sf_dir, long_ids=True))
 
     # ONE |V|-row degree table per round serves the census AND the
     # survivor filter: n_nodes = |deg| (every src with ≥1 edge has a deg
@@ -814,14 +790,7 @@ def graph_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame
     (node-sized, tiny next to the pair set at any scale); the cn >= 3
     floor keeps noise pairs out of the ranking. One keyed shuffle for
     pairs, TakeOrdered top-k."""
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    e0 = cache.checkpoint(e0)
+    e0 = cache.checkpoint(_purchase_pairs(spark, sf_dir))
     cdeg = e0.groupBy("c").agg(F.count(F.lit(1)).alias("d"))
     kept = e0.join(cdeg.filter(F.col("d") <= CN_DEG_CAP), "c").select("c", "s")
     sdeg = kept.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
@@ -916,37 +885,13 @@ def graph_harmonic_centrality_sampled(spark: SparkSession, sf_dir: str) -> DataF
     is O(S·V) (seed, node, dist) rows, never O(E); rounds are bounded and
     checkpointed (constant plan depth). The final score is one keyed
     aggregation + TakeOrdered."""
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-    )
-    cnode = F.concat(F.lit("c"), F.col("o_custkey").cast("string"))
-    snode = F.concat(F.lit("s"), F.col("l_suppkey").cast("string"))
-    edges = cache.checkpoint(
-        _sym_edges(e0, cnode, snode)
-    )
-    visited = spark.createDataFrame(
+    edges = cache.checkpoint(_purchase_edges(spark, sf_dir))
+    seeds = spark.createDataFrame(
         [(s, s, 0) for s in HC_SEEDS], "seed string, node string, dist int"
     )
-    frontier = visited.select("seed", "node")
-    for k in range(1, HC_HOPS + 1):
-        nxt = (
-            edges.join(frontier, edges.src == frontier.node)
-            .select("seed", F.col("dst").alias("node"))
-            .distinct()
-        )
-        new = cache.checkpoint(
-            nxt.join(visited, ["seed", "node"], "left_anti").select(
-                "seed", "node", F.lit(k).cast("int").alias("dist")
-            )
-        )
-        visited = cache.checkpoint(visited.unionByName(new))
-        frontier = new.select("seed", "node")
     return (
-        visited.filter(F.col("dist") > 0)
+        _bfs(edges, seeds, HC_HOPS)
+        .filter(F.col("dist") > 0)
         .groupBy("node")
         .agg(
             F.sum(F.expr(f"{_HC_LCM} div dist")).cast("bigint").alias(
@@ -1023,36 +968,8 @@ def graph_modularity_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: reuses the LPA rounds (audited: O(V) state, checkpointed
     edges); the intra count is two node-keyed label joins; degree and
     community sums are keyed aggregations; output is one row."""
-    from pyspark.sql import Window
-
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-    )
-    cnode = F.concat(F.lit("c"), F.col("o_custkey").cast("string"))
-    snode = F.concat(F.lit("s"), F.col("l_suppkey").cast("string"))
-    edges = cache.checkpoint(
-        _sym_edges(e0, cnode, snode)
-    )
-    labels = edges.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    )
-    for _ in range(LPA_ITERS):
-        votes = (
-            edges.join(labels, edges.src == labels.node)
-            .groupBy("dst", "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        w = Window.partitionBy("dst").orderBy(F.col("c").desc(), F.col("label"))
-        labels = (
-            votes.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(F.col("dst").alias("node"), "label")
-        )
-    labels = cache.checkpoint(labels)
+    edges = cache.checkpoint(_purchase_edges(spark, sf_dir))
+    labels = cache.checkpoint(_lpa_labels(edges))
     m = edges.agg(F.expr("count(1) div 2").alias("m"))
     la = labels.select(F.col("node").alias("src"), F.col("label").alias("la"))
     lb = labels.select(F.col("node").alias("dst"), F.col("label").alias("lb"))

@@ -46,9 +46,10 @@ def task_slots(master: str) -> int | None:
 
 @dataclass(frozen=True)
 class EngineConfig:
-    """Engine configuration, env-overridable (names mirror the reference's
-    LISTEN_PORT / STALE_TIMEOUT_MS / KINESIS_STREAM contract,
-    reference config/runtime.exs:3,11-15,51-65)."""
+    """Session configuration, env-overridable. Trike's other runtime
+    settings live where they are used: the stale timeout and heartbeat are
+    ``build_ingest_pipeline`` parameters, the stream name and client are
+    ``KinesisSink`` fields."""
 
     master: str = field(
         default_factory=lambda: os.environ.get(
@@ -58,24 +59,6 @@ class EngineConfig:
     # None: one partition per task slot of ``master`` (see task_slots);
     # still None for a master whose slots are unknown
     shuffle_partitions: int | None = None
-    # trike's stale connection timeout (reference config/config.exs:19)
-    stale_timeout_ms: int = field(
-        default_factory=lambda: int(os.environ.get("STALE_TIMEOUT_MS", "300000"))
-    )
-    # trike's heartbeat packet (reference config/config.exs:21)
-    heartbeat: str = field(
-        default_factory=lambda: os.environ.get("OCS_HEARTBEAT", "HEARTBEAT")
-    )
-    # "console" selects the fake sink, like KINESIS_STREAM=console
-    # (reference config/runtime.exs:11-15)
-    kinesis_stream: str = field(
-        default_factory=lambda: os.environ.get("KINESIS_STREAM", "console")
-    )
-    sf_dir: str = field(
-        default_factory=lambda: os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-        )
-    )
 
     def __post_init__(self) -> None:
         if self.shuffle_partitions is None:

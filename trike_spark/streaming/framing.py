@@ -44,7 +44,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-EOT = "\x04"  # proxy.ex:42
+from trike_spark.functions.cloud_event import EOT
+
 DEFAULT_STALE_TIMEOUT_MS = 300_000  # config/config.exs:19
 
 # input: one row per received chunk

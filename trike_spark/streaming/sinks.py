@@ -11,8 +11,9 @@ Design:
     previous put for that key (proxy.ex:177-204); the chain persists across
     micro-batches in a sequence ledger.
   * The client is injectable exactly like the reference's ``put_record_fn``
-    (proxy.ex:23-24, :65): ``KINESIS_STREAM=console`` (default) selects the
-    logging fake (runtime.exs:11-15); production wires boto3.
+    (proxy.ex:23-24, :65): a ``KinesisSink`` built without a ``client``
+    puts to the logging fake, as ``KINESIS_STREAM=console`` does in the
+    reference (runtime.exs:11-15); production passes a boto3 client.
   * Delivery contract: at-least-once. A failed put raises → Spark retries
     the micro-batch (the reference crashes the connection process and lets
     upstream resend, proxy.ex:203). Deterministic CloudEvent ids make
