@@ -27,17 +27,40 @@ def test_jaccard_checkpoints_released(spark):
     assert _persistent_rdd_count(spark) <= base
 
 
-def test_cc_star_checkpoints_released(spark):
-    from trike_spark.operators.graph import connected_components_star
+def test_cc_checkpoints_released(spark):
+    from trike_spark.operators.graph import connected_components
 
     release_checkpoints()
     base = _persistent_rdd_count(spark)
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "doc_a bigint, doc_b bigint"
+        [(1, 2), (2, 3), (3, 4), (10, 11)], "doc_a bigint, doc_b bigint"
     )
-    connected_components_star(edges).collect()
+    connected_components(edges).collect()
     release_checkpoints()
     assert _persistent_rdd_count(spark) <= base
+
+
+def test_release_restores_lineage_logger_level(spark):
+    """Releasing silences Spark's per-RDD "lineage has been truncated"
+    WARN only for the unpersist calls: the logger's level afterwards is
+    the level it had before, and no logger configuration is left behind."""
+    from trike_spark.cache import _LINEAGE_LOGGER, checkpoint, release
+
+    log4j = spark.sparkContext._jvm.org.apache.logging.log4j
+    config = log4j.LogManager.getContext(False).getConfiguration()
+
+    def level() -> str:
+        return log4j.LogManager.getLogger(_LINEAGE_LOGGER).getLevel().toString()
+
+    def own() -> bool:  # configured itself, rather than inheriting
+        return config.getLoggers().containsKey(_LINEAGE_LOGGER)
+
+    release_checkpoints()
+    before = (level(), own())
+    release(checkpoint(spark.range(3)))
+    checkpoint(spark.range(4))
+    assert release_checkpoints() == 1
+    assert (level(), own()) == before
 
 
 def test_bfs_frees_superseded_generations(spark):

@@ -1,10 +1,10 @@
-"""Connected-components operators: min-label propagation vs the
-alternating large-star/small-star algorithm (operators/graph.py).
+"""Connected components (operators/graph.py): min-label propagation that
+hooks and shortcuts after every round that changed a label.
 
-The star variant exists for adversarial diameters — a 1000-node chain
-needs 1000 min-label rounds but only O(log n) star rounds — so these
-tests pin (a) agreement between the two algorithms on assorted graphs,
-(b) the star variant's round count on a deep chain, and (c) the loud
+Plain min-label propagation needs as many rounds as the graph's diameter
+— a 1000-node chain would need 1000 — so these tests pin (a) agreement
+with a pure-Python union-find on assorted graphs, (b) the round count on
+a deep chain, with ordered and with hashed node ids, and (c) the loud
 failure contract when max_iter is exhausted (ADVICE r2: silent
 non-convergence returned wrong labels).
 """
@@ -15,11 +15,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from trike_spark.operators.graph import (
-    ConvergenceError,
-    connected_components,
-    connected_components_star,
-)
+from trike_spark.operators.graph import ConvergenceError, connected_components
 
 
 def _edges(spark, pairs):
@@ -28,6 +24,24 @@ def _edges(spark, pairs):
 
 def _labels(df):
     return {(r["node"], r["lbl"]) for r in df.collect()}
+
+
+def _union_find(pairs):
+    """Reference: (node, component minimum) for every edge endpoint."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {(n, find(n)) for n in parent}
 
 
 GRAPHS = {
@@ -39,35 +53,43 @@ GRAPHS = {
 
 
 @pytest.mark.parametrize("name", sorted(GRAPHS))
-def test_star_agrees_with_min_label(spark, name):
+def test_cc_matches_union_find(spark, name):
     edges = _edges(spark, GRAPHS[name])
-    a = _labels(connected_components(edges))
-    b = _labels(connected_components_star(edges))
-    assert a == b
+    assert _labels(connected_components(edges)) == _union_find(GRAPHS[name])
 
 
-def test_chain_1000_star_converges_in_log_rounds(spark):
-    chain = spark.range(999).select(
+def _chain(spark, n, hashed):
+    chain = spark.range(n - 1).select(
         F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
     )
-    stats: dict = {}
-    labels = connected_components_star(chain, max_iter=30, _stats=stats)
-    got = labels.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("lbl")).alias("s"),
-        F.max("lbl").alias("mx"),
-    ).first()
-    assert got["n"] == 1000 and got["s"] == 0 and got["mx"] == 0
-    # O(log² n) worst case; observed well under 15 for a 1000-chain.
-    assert stats["iterations"] <= 15
+    if hashed:  # node ids in no relation to chain position
+        chain = chain.select(
+            F.xxhash64("doc_a").alias("doc_a"), F.xxhash64("doc_b").alias("doc_b")
+        )
+    return chain
+
+
+def test_chain_1000_converges_in_log_rounds(spark):
+    for hashed in (False, True):
+        chain = _chain(spark, 1000, hashed)
+        lo = chain.select(F.least("doc_a", "doc_b").alias("m")).agg(F.min("m")).first()[0]
+        stats: dict = {}
+        labels = connected_components(chain, max_iter=30, _stats=stats)
+        got = labels.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min("lbl").alias("mn"),
+            F.max("lbl").alias("mx"),
+        ).first()
+        assert (got["n"], got["mn"], got["mx"]) == (1000, lo, lo)
+        # min-label alone would need 1000 rounds; measured 10 (ordered)
+        # and 11 (hashed), including the final no-change round.
+        assert stats["iterations"] <= 15, (hashed, stats)
 
 
 def test_chain_min_label_raises_instead_of_wrong_labels(spark):
-    chain = spark.range(99).select(
-        F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
-    )
+    # the 100-node chain needs 7 rounds; 5 must fail loudly
     with pytest.raises(ConvergenceError, match="max_iter"):
-        connected_components(chain, max_iter=5)
+        connected_components(_chain(spark, 100, hashed=False), max_iter=5)
 
 
 def test_min_label_converges_on_shallow_graph_with_stats(spark):
@@ -84,16 +106,15 @@ def test_min_label_converges_on_shallow_graph_with_stats(spark):
 def test_reliable_checkpoint_mode(spark, tmp_path, monkeypatch):
     """SPARK_CHECKPOINT_DIR flips every cache.checkpoint site to reliable
     checkpoints (setCheckpointDir + Dataset.checkpoint) — the cluster
-    deployment mode where executor loss must be survivable. Both CC
-    algorithms must produce identical labels in both modes, and the
-    checkpoint dir must actually receive checkpoint files (proof the
+    deployment mode where executor loss must be survivable. CC must
+    produce the same labels in this mode, hooking rounds included, and
+    the checkpoint dir must actually receive checkpoint files (proof the
     reliable path ran, not the local one)."""
     ckpt_dir = str(tmp_path / "reliable_ckpt")
     monkeypatch.setenv("SPARK_CHECKPOINT_DIR", ckpt_dir)
-    edges = _edges(spark, GRAPHS["two_triangles"])
-    expected = {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (12, 10)}
-    assert _labels(connected_components(edges)) == expected
-    assert _labels(connected_components_star(edges)) == expected
+    for name in ("two_triangles", "reversed_chain"):
+        edges = _edges(spark, GRAPHS[name])
+        assert _labels(connected_components(edges)) == _union_find(GRAPHS[name])
     import os
 
     written = [

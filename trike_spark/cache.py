@@ -37,6 +37,9 @@ from pyspark.sql import DataFrame, SparkSession
 # (session, rdd_id) pairs created by checkpoint() and not yet released.
 _TRACKED: list[tuple[SparkSession, int]] = []
 
+# Logger of the WARN Spark emits when a locally checkpointed RDD is unpersisted.
+_LINEAGE_LOGGER = "org.apache.spark.rdd.MapPartitionsRDD"
+
 # Sessions whose checkpoint dir has been pointed at SPARK_CHECKPOINT_DIR.
 _CKPT_DIR_SET: set[int] = set()
 
@@ -70,6 +73,42 @@ def checkpoint(df: DataFrame) -> DataFrame:
     return out
 
 
+def _lineage_logger(spark: SparkSession):
+    """(logger, ERROR) handles for :data:`_LINEAGE_LOGGER`, resolved once per
+    SparkContext: each step of a py4j package path is a JVM round trip, and
+    resolving them on every release cost ~6 ms per call."""
+    sc = spark.sparkContext
+    handles = getattr(sc, "_trike_lineage_logger", None)
+    if handles is None:
+        log4j = sc._jvm.org.apache.logging.log4j
+        handles = (log4j.LogManager.getLogger(_LINEAGE_LOGGER), log4j.Level.ERROR)
+        sc._trike_lineage_logger = handles
+    return handles
+
+
+def _unpersist(spark: SparkSession, rids) -> int:
+    """Unpersist whichever of ``rids`` are still cached; returns how many
+    were. Spark logs a WARN for each locally checkpointed RDD unpersisted
+    ("its lineage has been truncated") — expected at every release here —
+    so that one logger is raised to ERROR for the calls, then restored.
+    ``setLevel`` on the logger itself touches no log4j configuration, and
+    the next configuration change resets it anyway."""
+    logger, error = _lineage_logger(spark)
+    level = logger.getLevel()
+    logger.setLevel(error)
+    try:
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        released = 0
+        for rid in rids:
+            jrdd = jmap.get(rid)
+            if jrdd is not None:
+                jrdd.unpersist()
+                released += 1
+        return released
+    finally:
+        logger.setLevel(level)
+
+
 def release(df: DataFrame) -> None:
     """Unpersist one checkpointed DataFrame's blocks NOW (iterative
     operators free each superseded generation mid-loop — note that plain
@@ -78,11 +117,7 @@ def release(df: DataFrame) -> None:
     if not rids:
         return
     spark = df.sparkSession
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in rids:
-        jrdd = jmap.get(rid)
-        if jrdd is not None:
-            jrdd.unpersist()
+    _unpersist(spark, rids)
     _TRACKED[:] = [(s, r) for (s, r) in _TRACKED if r not in rids or s is not spark]
 
 
@@ -94,11 +129,7 @@ def release_checkpoints() -> int:
     while _TRACKED:
         spark, rid = _TRACKED.pop()
         try:
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            jrdd = jmap.get(rid)
-            if jrdd is not None:
-                jrdd.unpersist()
-                released += 1
+            released += _unpersist(spark, (rid,))
         except Exception:  # session already stopped — nothing to free
             pass
     return released

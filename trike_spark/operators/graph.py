@@ -1,6 +1,6 @@
 """Iterative graph operators (SURVEY.md §4 scale posture): connected
-components by min-label propagation, shared by the near-dup clustering
-query and the training-data pipeline.
+components by min-label propagation with hooking and shortcutting, shared
+by the near-dup clustering, curation, training-data and kNN faces.
 
 Scale design (fixes VERDICT r1 "uncheckpointed iterative loop"):
   * ``edges`` is persisted ONCE and reused by every iteration's join.
@@ -11,8 +11,8 @@ Scale design (fixes VERDICT r1 "uncheckpointed iterative loop"):
     growing O(iterations), which at corpus scale means no O(d²) recompute
     and no StackOverflow from a kilometer-deep logical plan.
   * The previous generation is unpersisted as soon as its successor is
-    materialized, so peak storage is two label tables (2 rows per edge
-    endpoint — tiny next to the corpus).
+    materialized, so peak storage is two label tables (one row per node,
+    tiny next to the corpus).
   * On a real multi-executor cluster set ``SPARK_CHECKPOINT_DIR`` (an
     HDFS/S3 path): every ``cache.checkpoint`` site then uses reliable
     checkpoints (``setCheckpointDir`` + ``.checkpoint(eager=True)``) so an
@@ -20,13 +20,15 @@ Scale design (fixes VERDICT r1 "uncheckpointed iterative loop"):
     localCheckpoint is the right tradeoff — no distributed FS required.
     Both modes run the same tests (tests/test_graph_cc.py::test_reliable_checkpoint_mode).
 
-Iteration count = graph diameter for min-label propagation. Near-dup
-graphs are shallow (clusters of a handful of copies), so convergence is a
-few rounds even at corpus scale; for adversarial diameters (long chains)
-:func:`connected_components_star` implements the alternating
-large-star/small-star algorithm (Kiveris et al., "Connected Components in
-MapReduce and Beyond", SoCC'14) — O(log² n) rounds worst-case, observed
-O(log n), with the same join+agg primitives and checkpoint discipline.
+Rounds: plain min-label propagation needs as many rounds as the graph's
+diameter. After every round that changed a label, the next round starts
+from labels hooked and shortcut (Shiloach & Vishkin, "An O(log n) parallel
+connectivity algorithm", J. Algorithms 1982; FastSV, SIAM PP 2020): every
+node jumps to the smallest label held by any member of its old label's
+group or by its old label's own node. Shallow near-dup graphs still
+converge in one round (nothing changed, so nothing is hooked); deep graphs
+converge in a number of rounds that grows with log n, not with the
+diameter (a 1,000-node chain: 10 rounds; tests/test_graph_cc.py).
 """
 
 from __future__ import annotations
@@ -69,7 +71,7 @@ def connected_components(
     # distinct()+identity labels (one shuffle, zero progress), group the
     # symmetric edge list by endpoint and seed lbl = min(node, neighbors) —
     # the same single shuffle performs the first propagation round, so a
-    # diameter-d graph converges in d rounds + probe instead of d+1.
+    # one-hop graph (the near-dup pair graphs) converges in one round.
     labels = cache.checkpoint(
         edges.groupBy(F.col("e_src").alias("node"))
         .agg(F.min("e_dst").alias("nmin"))
@@ -77,6 +79,7 @@ def connected_components(
     )
     changed = 1
     iterations = 0
+    prev = labels
     for _ in range(max_iter):
         neighbor_min = (
             edges.join(labels, edges.e_src == labels.node)
@@ -90,165 +93,42 @@ def connected_components(
             labels.join(neighbor_min, "node", "left")
             .select(
                 "node",
+                F.col("lbl").alias("plbl"),
                 F.least(F.col("lbl"), F.coalesce("nlbl", F.col("lbl"))).alias("lbl"),
                 (F.col("nlbl") < F.col("lbl")).alias("chg"),
             )
         )
         new_labels = cache.checkpoint(new_labels)  # materialize + truncate lineage
         changed = new_labels.filter("chg").limit(1).count()
-        cache.release(labels)  # DataFrame.unpersist is a no-op for checkpoints
-        labels = new_labels
+        cache.release(prev)  # DataFrame.unpersist is a no-op for checkpoints
+        prev = new_labels
         iterations += 1
         if changed == 0:
             break
+        # Hook + shortcut, only after a round that changed something: every
+        # member of old label L's group lies in L's component, and so does
+        # L itself, so the smallest new label among the group's members and
+        # L's own new label (one groupBy over both keyed by L) is a valid,
+        # never-larger label for each member. Labels stay component nodes
+        # and only fall, so the fixpoint is still the component minimum,
+        # and the next round's chg probe still proves it.
+        hooked = (
+            new_labels.select(F.col("plbl").alias("k"), "lbl")
+            .unionByName(new_labels.select(F.col("node").alias("k"), "lbl"))
+            .groupBy("k")
+            .agg(F.min("lbl").alias("hlbl"))
+        )
+        labels = new_labels.join(hooked, new_labels.plbl == hooked.k).select(
+            "node", F.col("hlbl").alias("lbl")
+        )
+    edges.unpersist()
     if changed != 0:
-        edges.unpersist()
         raise ConvergenceError(
             f"connected_components: labels still changing after max_iter={max_iter} "
-            f"rounds (min-label propagation needs diameter rounds; use "
-            f"connected_components_star for deep graphs)"
+            f"rounds (rounds grow with log n; a 1,000-node chain needs 10)"
         )
     if _stats is not None:
         _stats["iterations"] = iterations
-    labels = labels.select("node", "lbl")
-    edges.unpersist()
-    # labels stays checkpointed: downstream consumers read the materialized
-    # blocks; no lineage back through the loop exists to recompute.
-    return labels
-
-
-def _star_round(edges: DataFrame, large: bool) -> DataFrame:
-    """One large-star (connect strictly-larger neighbors to the
-    neighborhood min) or small-star (connect ≤-neighbors and self to the
-    min) round. ``edges`` is directed (u, v).
-
-    Large-star stays groupBy-min + equi-join: its group key is the
-    neighborhood CENTER, whose degree mid-convergence reaches component
-    size — min is map-side combinable and the u-keyed join is AQE-skew-
-    splittable, so the hot root never lands in one task's sort buffer.
-
-    Small-star keeps the same combinable groupBy + join, but the former
-    third reference — ``unionByName(mins)`` to add the (u, m) self rows —
-    is replaced by exploding each joined edge row into (v, m) AND (u, m):
-    the trailing distinct collapses the per-edge (u, m) duplicates to the
-    exact row set the union produced, while the small-star input (the
-    un-checkpointed large-star output, whose post-shuffle aggregations
-    re-run once per referencing branch — Spark does not CSE across
-    join/union branches and exchange reuse only dedups the shuffle) is
-    referenced twice instead of three times. A full window rewrite of
-    small-star (single reference) was measured and REJECTED: 5-10 %
-    slower at sf0.1 across three consuming faces (the window exchange
-    carries every edge row un-combined where groupBy ships per-key
-    partials, and the runtime exchange reuse already dedups the two
-    remaining references' shuffles). Measured on the sf0.01 pair graph:
-    composite-round plan 22 → 17 Exchanges, identical row sets 4 rounds
-    deep (guide §2.4)."""
-    if large:
-        # Γ(u) over the symmetric view; m = min(Γ(u) ∪ {u}).
-        sym = edges.unionByName(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mv"))
-            .select("u", F.least("mv", "u").alias("m"))
-        )
-        return (
-            sym.filter(F.col("v") > F.col("u"))
-            .join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .distinct()
-        )
-    # small-star: neighbors v ≤ u (directed edges already point small←large
-    # after a large-star round), emit (w, m) for w ∈ Γ_small(u) ∪ {u}.
-    small = edges.filter(F.col("v") <= F.col("u"))
-    mins = (
-        small.groupBy("u")
-        .agg(F.min("v").alias("mv"))
-        .select("u", F.least("mv", "u").alias("m"))
-    )
-    return (
-        small.join(mins, "u")
-        .select(F.explode(F.array("v", "u")).alias("u"), F.col("m").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 30,
-    _stats: dict | None = None,
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    (Kiveris et al., SoCC'14): O(log² n) rounds worst case vs min-label
-    propagation's O(diameter) — the production-hardened choice for graphs
-    with long chains. Same contract as :func:`connected_components`:
-    returns ``(node, lbl)``, lbl = component min.
-
-    Convergence probe: per-round (count, xxhash64-sum) fingerprint of the
-    edge set — O(|E|) scan, no self-join; on fixpoint the edge set is
-    verified to be a star forest (every parent is a root), so a fingerprint
-    collision cannot smuggle a wrong answer through.
-    """
-    base = cache.checkpoint(pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")))
-    nodes = (
-        base.select("u")
-        .unionByName(base.select(F.col("v").alias("u")))
-        .distinct()
-        .withColumnRenamed("u", "node")
-    )
-    nodes = cache.checkpoint(nodes)
-    edges = cache.checkpoint(base.filter(F.col("u") != F.col("v")).distinct())
-
-    def fingerprint(e: DataFrame) -> tuple[int, int]:
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal(38,0) accumulator: a long sum of xxhash64 values
-            # overflows under ANSI mode; 38 digits absorbs ~1e19 edges.
-            F.coalesce(
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")), F.lit(0)
-            ).alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    prev = fingerprint(edges)
-    iterations = 0
-    converged = False
-    for _ in range(max_iter):
-        new_edges = cache.checkpoint(
-            _star_round(_star_round(edges, large=True), large=False)
-        )
-        cache.release(edges)
-        edges = new_edges
-        iterations += 1
-        cur = fingerprint(edges)
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
-        raise ConvergenceError(
-            f"connected_components_star: edge set not stable after max_iter={max_iter} rounds"
-        )
-    # Star-forest verification: every parent must itself be a root (never
-    # appear as a child with a different parent). Cheap at star size and
-    # makes the fingerprint probe collision-proof.
-    e1, e2 = edges.alias("e1"), edges.alias("e2")
-    bad = (
-        e1.join(e2, F.col("e1.v") == F.col("e2.u"))
-        .filter(F.col("e2.v") != F.col("e1.v"))
-        .limit(1)
-        .count()
-    )
-    if bad:
-        raise ConvergenceError("connected_components_star: fixpoint is not a star forest")
-    if _stats is not None:
-        _stats["iterations"] = iterations
-    labels = (
-        nodes.join(edges, nodes.node == edges.u, "left")
-        .select("node", F.coalesce(F.col("v"), F.col("node")).alias("lbl"))
-    )
-    return labels
+    # the last generation stays checkpointed: downstream consumers read the
+    # materialized blocks; no lineage back through the loop exists to recompute.
+    return prev.select("node", "lbl")

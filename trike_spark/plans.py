@@ -58,10 +58,6 @@ def read_schemas(df: DataFrame) -> list[str]:
     return re.findall(r"ReadSchema: (struct<[^>]*>)", formatted_plan(df))
 
 
-def wholestage_codegen_ids(df: DataFrame) -> set[str]:
-    return set(re.findall(r"WholeStageCodegen \((\d+)\)", formatted_plan(df)))
-
-
 def scan_count(df: DataFrame) -> int:
     return plan_tree(df).count("Scan parquet")
 

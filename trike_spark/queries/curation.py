@@ -764,7 +764,7 @@ def curation_pseudonymize_customers(spark: SparkSession, sf_dir: str) -> DataFra
 #     cross_split_pairs column as the proof.
 #
 # 100 TB posture: both reuse the bounded pair pipeline (60-bit shingle
-# keys, DF hot-key guard) and the O(log^2 n) star-CC operator; the split
+# keys, DF hot-key guard) and the shared CC operator; the split
 # assignment itself is a narrow map keyed on the group label, and the
 # leak-count join carries (doc_id, split) pairs only.
 
@@ -861,20 +861,21 @@ def curation_split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def curation_split_cluster_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fix for what split_leakage_report measures: the md5 draw is
-    keyed on the connected-component label of the near-dup graph (star-CC,
+    keyed on the connected-component label of the near-dup graph (CC,
     operators/graph.py), so every near-dup cluster lands in ONE split.
     Singleton docs (no near-dup edge) use their own doc_id as the group
     key — same distribution, no join fan-out. The face re-counts
     cross-split pairs as its own proof column instead of asserting zero.
     """
     from trike_spark import cache
-    from trike_spark.operators.graph import connected_components_star
+    from trike_spark.operators.graph import connected_components
     from trike_spark.queries.dedup import dedup_ngram_jaccard_pairs
 
+    # the leak join below reads pairs again, so materialize it once here
     pairs = cache.checkpoint(
         dedup_ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
     )
-    labels = connected_components_star(pairs, src="doc_a", dst="doc_b")
+    labels = connected_components(pairs, src="doc_a", dst="doc_b")
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     group = F.coalesce(F.col("lbl"), F.col("doc_id")).alias("group_id")
     # assigned is consumed by three plan branches (summary + both sides of
@@ -1228,8 +1229,8 @@ def curation_dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup's second half: dropping duplicates loses their metadata — the
     survivor should carry the UNION of where its copies were seen (source
     attribution drives mixture weights and licensing audits; max length
-    picks the least-truncated copy). Keyed on the near-dup CLUSTER (star-
-    CC over the exact-Jaccard pair graph) because this corpus, like most
+    picks the least-truncated copy). Keyed on the near-dup CLUSTER (CC
+    over the exact-Jaccard pair graph) because this corpus, like most
     crawls post-normalization, has few byte-exact copies but real
     near-dup families.
 
@@ -1238,14 +1239,11 @@ def curation_dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     participants, a small fraction of the corpus), with sorted-distinct
     list merges (collect_set is arrival-ordered; sort_array restores the
     canonical form — the string_agg determinism rule)."""
-    from trike_spark import cache
-    from trike_spark.operators.graph import connected_components_star
+    from trike_spark.operators.graph import connected_components
     from trike_spark.queries.dedup import dedup_ngram_jaccard_pairs
 
-    pairs = cache.checkpoint(
-        dedup_ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    )
-    labels = connected_components_star(pairs, src="doc_a", dst="doc_b")
+    pairs = dedup_ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    labels = connected_components(pairs, src="doc_a", dst="doc_b")
     d = load_table(spark, sf_dir, "documents")
     return (
         d.join(labels, d["doc_id"] == labels["node"])

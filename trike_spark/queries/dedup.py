@@ -339,26 +339,6 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "dedup_cluster_canonical_star",
-    _SQL_CLUSTER_CANONICAL,
-    doc=(
-        "Near-dup clustering via alternating large-star/small-star CC — "
-        "O(log² n) rounds vs diameter; same output, same oracle."
-    ),
-)
-def dedup_cluster_canonical_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same clusters as ``dedup_cluster_canonical`` computed with the
-    adversarial-diameter-safe star algorithm (operators/graph.py:
-    ``connected_components_star``); registered behind the identical oracle
-    so the driver hash-verifies both algorithms agree."""
-    from trike_spark.operators.graph import connected_components_star
-
-    pairs = dedup_ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    labels = connected_components_star(pairs, src="doc_a", dst="doc_b")
-    return labels.select(F.col("node").alias("doc_id"), F.col("lbl").alias("canonical_id"))
-
-
-@register(
     "dedup_simhash",
     f"""
     WITH tok AS (
@@ -1082,13 +1062,11 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The report a dedup run is judged by: the distribution of duplicate-
     cluster sizes (and the document mass in each), i.e. how much the
     corpus shrinks when each cluster keeps one survivor. Composes the
-    driver-verified star-CC clustering unchanged and adds two tiny keyed
+    driver-verified CC clustering unchanged and adds two tiny keyed
     aggregations — the histogram output is at most max-cluster-size rows
     no matter the corpus size."""
-    from trike_spark.operators.graph import connected_components_star
-
     pairs = dedup_ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    labels = connected_components_star(pairs, src="doc_a", dst="doc_b")
+    labels = connected_components(pairs, src="doc_a", dst="doc_b")
     sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("cluster_size"))
     return sizes.groupBy("cluster_size").agg(
         F.count(F.lit(1)).alias("n_clusters"),
@@ -1636,18 +1614,16 @@ def graph_knn_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The label-free clustering capstone: LSH buckets → per-node top-k
     edges, MUTUALIZED (kept only when reciprocated — the hub-suppression
     rule that stops one over-connected node from stitching everything
-    into a single blob) → star-CC: semantic grouping with NO ground-truth
+    into a single blob) → CC: semantic grouping with NO ground-truth
     label column anywhere in the chain — how a raw 100 TB embedding
     corpus gets its first cluster structure (SemDeDup cells, curriculum
     buckets, topic splits all start here). Measured at sf0.01: 16
     components vs 1 for the non-mutual graph.
 
     Scale shape: composes two already-audited stages (collision-bounded
-    graph build; O(log² n) star-CC with checkpointed generations) plus a
-    component-keyed count. The undirected edge union doubles the edge
+    graph build; hook-and-shortcut CC with checkpointed generations) plus
+    a component-keyed count. The undirected edge union doubles the edge
     list, never the corpus."""
-    from trike_spark.operators.graph import connected_components_star
-
     knn = sim_knn_graph_lsh(spark, sf_dir).select("src", "dst")
     # mutual filter: an edge survives only if BOTH endpoints rank each
     # other top-k — the standard hub-suppression rule, without which one
@@ -1669,8 +1645,7 @@ def graph_knn_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_dir") == 2)
         .select("src", "dst")
     )
-    edges = cache.checkpoint(edges)
-    labels = connected_components_star(edges, src="src", dst="dst")
+    labels = connected_components(edges, src="src", dst="dst")
     return labels.groupBy(F.col("lbl").alias("component")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_members")
     )

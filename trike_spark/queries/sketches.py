@@ -360,20 +360,6 @@ def _js_cell(h: Column, d: int) -> Column:
     return ((h % (1 << 30)) * F.lit(_cms_a(d)) + F.lit(_cms_b(d))) % CMS_P % JS_W
 
 
-def _js_cells_df(df: DataFrame, key: Column) -> DataFrame:
-    """(rows keyed by `key`) → (d, cell, c) sketch table via the
-    key-frequency vector: aggregate to (key, weight) FIRST (map-side
-    partials shrink the wire to per-task distincts — for a foreign key
-    far below row count), then hash each DISTINCT key once, fan its D
-    affine cells out, and weight-sum per (d, cell). Identical cells to
-    hashing every row (the sketch is linear in the frequency vector) at
-    1/(rows/distinct) of the md5 + explode cost — at sf0.1, 20k hashes
-    instead of 600k row-hashes ×D. The frequency vector is also exactly
-    what the estimate consumes (|A⋈B| = Σ f_A·f_B), making this the
-    canonical build-from-stats path."""
-    return _js_cells_from_freq(_key_freq(df, key))
-
-
 def _key_freq(df: DataFrame, key: Column) -> DataFrame:
     """Key-frequency vector (k, w) — the sketch build's input AND the
     exact inner-product control's input."""
@@ -383,6 +369,10 @@ def _key_freq(df: DataFrame, key: Column) -> DataFrame:
 
 
 def _js_cells_from_freq(freq: DataFrame) -> DataFrame:
+    """(k, w) frequency vector → (d, cell, c) sketch table: hash each
+    distinct key once, fan its D affine cells out, weight-sum per
+    (d, cell). The sketch is linear in the frequency vector, so the cells
+    equal hashing every row, at 1/(rows/distinct) of the hashing cost."""
     h = _h60(F.col("k"))
     cells = F.array(*[_js_cell(h, d) for d in range(CMS_D)])
     return (
