@@ -4,6 +4,9 @@ from __future__ import annotations
 
 import logging
 import time
+from types import SimpleNamespace
+
+from pyspark.sql import functions as F
 
 from trike_spark.streaming.health import HealthListener
 from trike_spark.streaming.sources import fake_chunk_stream
@@ -42,3 +45,28 @@ def test_health_listener_logs_progress(spark, tmp_path, caplog):
     assert "rows_per_sec=" in health[0] and "batch_duration_ms=" in health[0]
     assert f"state_store_instances={partitions} " in health[0], health[0]
     assert "state_commit_ms=" in health[0], health[0]
+    # the one batch's input rows are exactly the rows the counts add up to
+    counted = spark.table("health_probe").agg(F.sum("count")).first()[0] or 0
+    assert f" input_rows={counted} " in health[0], (counted, health[0])
+
+
+def test_health_line_sums_state_operator_times(caplog):
+    caplog.set_level(logging.INFO, logger="trike_spark.health")
+    op = dict(numRowsTotal=4, numStateStoreInstances=4, commitTimeMs=30)
+    progress = SimpleNamespace(
+        batchId=7,
+        numInputRows=1000,
+        processedRowsPerSecond=2000.0,
+        durationMs={"triggerExecution": 500},
+        stateOperators=[
+            SimpleNamespace(**op, allUpdatesTimeMs=120, allRemovalsTimeMs=40),
+            SimpleNamespace(**op, allUpdatesTimeMs=80, allRemovalsTimeMs=5),
+        ],
+    )
+    HealthListener().onQueryProgress(SimpleNamespace(progress=progress))
+    (line,) = [r.message for r in caplog.records]
+    assert line == (
+        "health batch_id=7 input_rows=1000 rows_per_sec=2000.0 batch_duration_ms=500 "
+        "state_rows=8 state_store_instances=8 state_commit_ms=60 "
+        "state_updates_ms=200 state_removals_ms=45"
+    )

@@ -13,8 +13,14 @@ Design stance (see SURVEY.md):
   * Streaming = Structured Streaming; batch and stream share the same
     column-expression functions so the oracle-checked batch results prove
     the streaming semantics.
+  * A Python worker re-reads an import archive's directory only when the
+    archive changed (``zipimport_guard``, installed on import), not on
+    every task.
 """
 
+from trike_spark import zipimport_guard
 from trike_spark.session import get_spark  # noqa: F401
+
+zipimport_guard.install()
 
 __version__ = "0.1.0"

@@ -29,6 +29,7 @@ changes are breaking by default — this note is the contract reminder.
 
 from __future__ import annotations
 
+import warnings
 from collections.abc import Iterable, Iterator
 
 import numpy as np
@@ -45,6 +46,17 @@ from pyspark.sql.types import (
 )
 
 from trike_spark.functions.cloud_event import EOT
+
+# pyspark's applyInPandasWithState serializer pads every output batch by
+# concatenating all-NA rows, which pandas >= 2.1 answers with this warning
+# several times per trigger. This import runs in the worker, and the worker
+# never resets ``warnings.filters``.
+warnings.filterwarnings(
+    "ignore",
+    message="The behavior of DataFrame concatenation with empty or all-NA entries is deprecated",
+    category=FutureWarning,
+    module="pyspark.sql.pandas.serializers",
+)
 
 DEFAULT_STALE_TIMEOUT_MS = 300_000  # config/config.exs:19
 

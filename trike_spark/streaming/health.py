@@ -28,16 +28,23 @@ class HealthListener(StreamingQueryListener):
         ops = p.stateOperators or []
         # keys mirror the reference's got_data/connection scan lines (O4);
         # state_store_instances is the shuffle partition count the query's
-        # checkpoint pinned, and each instance commits every batch
+        # checkpoint pinned, and each instance commits every batch.
+        # state_updates_ms/state_removals_ms sum the stateful tasks' Python
+        # runner time on new data and on timed-out keys; input_rows=0 marks a
+        # timeout sweep batch
         logger.info(
-            "health batch_id=%s rows_per_sec=%.1f batch_duration_ms=%s state_rows=%d "
-            "state_store_instances=%d state_commit_ms=%d",
+            "health batch_id=%s input_rows=%d rows_per_sec=%.1f batch_duration_ms=%s "
+            "state_rows=%d state_store_instances=%d state_commit_ms=%d "
+            "state_updates_ms=%d state_removals_ms=%d",
             p.batchId,
+            p.numInputRows,
             p.processedRowsPerSecond or 0.0,
             p.durationMs.get("triggerExecution") if p.durationMs else None,
             sum(s.numRowsTotal for s in ops),
             sum(s.numStateStoreInstances for s in ops),
             sum(s.commitTimeMs for s in ops),
+            sum(s.allUpdatesTimeMs for s in ops),
+            sum(s.allRemovalsTimeMs for s in ops),
         )
 
     def onQueryTerminated(self, event) -> None:
