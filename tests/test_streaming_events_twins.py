@@ -2,8 +2,7 @@
 the per-user activity pivot and the click→purchase interval join (r3
 verdict item 8). Each twin runs Structured Streaming over the SAME parquet
 fixture its batch face reads, and asserts row-for-row parity with the
-registered batch query — the same batch/streaming symmetry contract the
-sketch/curation families carry (tests/test_streaming_analytics.py).
+registered batch query.
 
 Semantics notes:
   * Streaming has no ``pivot()`` — the twin is conditional aggregation

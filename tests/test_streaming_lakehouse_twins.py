@@ -1,10 +1,8 @@
-"""Streaming twins for the round-4 lakehouse faces: the conversion funnel
-(stateful applyInPandasWithState frontier) and the CDC upsert
-(foreachBatch MERGE into a keyed target). Each twin consumes the SAME
-parquet fixture its batch face reads and asserts parity with the
-registered batch query — the symmetry contract the other families carry.
+"""Streaming twin for the CDC upsert lakehouse face: a foreachBatch MERGE
+into a keyed target consumes the SAME parquet fixture the batch face
+reads and must end in the registered batch query's state.
 
-The CDC twin's target is a driver-side dict standing in for the bucketed
+The twin's target is a driver-side dict standing in for the bucketed
 table a deployment would MERGE into; per-batch work is bounded by batch
 size (the change set), never by target size — which is the property that
 makes foreachBatch-upsert the standard streaming MERGE shape.
@@ -16,8 +14,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from trike_spark.queries.events import events_cdc_upsert, events_funnel_conversion
-from trike_spark.streaming.funnel import funnel_stream
+from trike_spark.queries.events import events_cdc_upsert
 
 US = 1_000_000
 T0 = 1_704_067_200 * US  # 2024-01-01 00:00:00 UTC
@@ -25,17 +22,15 @@ DAY = 86400 * US
 
 EVENTS = [
     # (event_id, ts_us, user_id, event_type, value)
-    # user 1: full funnel, and a post-cutoff purchase → CDC state purchase
+    # user 1: a post-cutoff purchase → CDC state purchase
     (1, T0 + 1 * DAY, 1, "signup", 1.0),
     (2, T0 + 2 * DAY, 1, "click", 2.0),
     (3, T0 + 20 * DAY, 1, "purchase", 9.9),
-    # user 2: click BEFORE signup (funnel level 1); last event is a
-    # post-cutoff tombstone → CDC deletes the row
+    # user 2: last event is a post-cutoff tombstone → CDC deletes the row
     (4, T0 + 1 * DAY, 2, "click", 1.0),
     (5, T0 + 3 * DAY, 2, "signup", 1.5),
     (6, T0 + 21 * DAY, 2, "error", 0.0),
-    # user 3: signup→click, no purchase (level 2); no post-cutoff events →
-    # CDC keeps the pre-cutoff snapshot row
+    # user 3: no post-cutoff events → CDC keeps the pre-cutoff snapshot row
     (7, T0 + 4 * DAY, 3, "signup", 3.0),
     (8, T0 + 5 * DAY, 3, "click", 3.5),
     # user 4: appears only AFTER the cutoff → CDC insert (not-matched)
@@ -68,30 +63,6 @@ def _read_events_stream(spark, sf_dir):
         "event_type string, value double, props string"
     )
     return spark.readStream.schema(schema).parquet(sf_dir)
-
-
-def test_streaming_funnel_twin_matches_batch_face(spark, tmp_path):
-    sf_dir = _events_fixture(tmp_path)
-    batch = {tuple(r) for r in events_funnel_conversion(spark, sf_dir).collect()}
-    # fixture covers levels 0 (no signup), 1 (click precedes signup), 2, 3
-    assert {r[-1] for r in batch} == {0, 1, 2, 3}
-
-    stream = _read_events_stream(spark, sf_dir)
-    q = (
-        funnel_stream(stream)
-        .writeStream.format("memory")
-        .queryName("funnel_twin")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_funnel"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(90)
-        rows = spark.table("funnel_twin").collect()
-        assert {tuple(r) for r in rows} == batch
-    finally:
-        q.stop()
 
 
 def test_streaming_cdc_upsert_twin_matches_batch_face(spark, tmp_path):
@@ -133,108 +104,3 @@ def test_streaming_cdc_upsert_twin_matches_batch_face(spark, tmp_path):
         q.stop()
     assert set(target.values()) == batch
 
-
-def test_streaming_funnel_state_is_frontier_across_batches(spark, tmp_path):
-    """Feed the fixture as TWO in-order micro-batches (split by ts): the
-    funnel must resume from its three-timestamp state, not reprocess."""
-    import pandas as pd
-
-    from trike_spark.streaming.funnel import _fold
-
-    # pure-fold unit check: in-order split equals one pass
-    evs = sorted([(e[1], e[3]) for e in EVENTS if e[2] == 1])
-    full = (0, 0, 0)
-    for ts, et in evs:
-        full = _fold(*full, ts, et)
-    half1 = (0, 0, 0)
-    for ts, et in evs[:2]:
-        half1 = _fold(*half1, ts, et)
-    resumed = half1
-    for ts, et in evs[2:]:
-        resumed = _fold(*resumed, ts, et)
-    assert resumed == full
-    assert full[0] and full[1] and full[2]
-    assert pd.to_datetime(full[2], unit="us") > pd.to_datetime(full[1], unit="us")
-
-
-def test_streaming_point_in_time_twin_matches_batch_face(spark, tmp_path):
-    """Stream-static as-of enrichment: arriving purchases joined to the
-    SCD2 state intervals must equal the batch point-in-time join on the
-    same fixture."""
-    from trike_spark.queries.events import events_scd2_point_in_time_join
-    from trike_spark.streaming.analytics import point_in_time_enrich
-    from trike_spark.io import load_table
-
-    sf_dir = _events_fixture(tmp_path)
-    batch = {tuple(r) for r in events_scd2_point_in_time_join(spark, sf_dir).collect()}
-    assert batch, "fixture must produce at least one enriched purchase"
-
-    # static dimension: the same interval build the batch face uses
-    from pyspark.sql import Window
-
-    e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("event_type").over(w)
-    state = e.filter(F.col("event_type") != "purchase")
-    ordered = state.select("user_id", "ts", "event_id", "event_type").select(
-        "*",
-        F.when(prev.isNull() | (prev != F.col("event_type")), 1).otherwise(0).alias("chg"),
-    )
-    intervals = ordered.filter(F.col("chg") == 1).select(
-        "user_id",
-        F.col("event_type").alias("state_type"),
-        F.col("ts").alias("valid_from"),
-        F.lead("ts").over(w).alias("valid_to"),
-    )
-
-    purchases = _read_events_stream(spark, sf_dir).filter(
-        F.col("event_type") == "purchase"
-    )
-    q = (
-        point_in_time_enrich(purchases, intervals)
-        .writeStream.format("memory")
-        .queryName("pit_twin")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_pit"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(90)
-        rows = spark.table("pit_twin").collect()
-        assert {tuple(r) for r in rows} == batch
-    finally:
-        q.stop()
-
-
-def test_streaming_trending_twin_matches_batch_face(spark, tmp_path):
-    from trike_spark.queries.events import TREND_TOPK, events_windowed_topk
-    from trike_spark.streaming.analytics import trending_rank_sink, trending_stream
-
-    sf_dir = _events_fixture(tmp_path)
-    batch = {tuple(r) for r in events_windowed_topk(spark, sf_dir).collect()}
-    assert batch
-
-    target = str(tmp_path / "trending_out")
-    stream = _read_events_stream(spark, sf_dir)
-    q = (
-        trending_stream(stream)
-        .writeStream.foreachBatch(trending_rank_sink(target, topk=TREND_TOPK))
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt_trending"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(90)
-    finally:
-        q.stop()
-    # the sink publishes through the versioned layer by default: the
-    # serving table is a snapshot (atomic manifest flip), read via
-    # read_version, with a batchId stamped for replay dedup
-    from trike_spark import versioned as V
-
-    got = {tuple(r) for r in V.read_version(spark, target).collect()}
-    assert got == batch
-    hist = V.history(target)
-    assert hist and all("batch_id" in m for m in hist)

@@ -1,32 +1,23 @@
-"""Streaming decode-or-quarantine twin: the batch face's Arrow kernel
-(magic-sniff → real PNG/JPEG decode → per-reason routing) applied to a
-stream of (path, content) records, with bucket counts maintained as a
-bounded streaming aggregate. Parity-pinned against the batch bucket
-schedule on an identical corpus."""
+"""Decode-or-quarantine routing per file: the batch face's Arrow kernel
+(magic-sniff → real PNG/JPEG decode → per-reason routing) applied to
+(path, content) records must route every row to the corpus's expected
+bucket. The routing is stateless, so the same kernel is append-safe on a
+stream."""
 
 from __future__ import annotations
 
-import base64
-import json
-import time
-
-
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 
 from trike_spark.queries.multimodal import _quarantine_corpus_member
-from trike_spark.streaming.analytics import streaming_decode_quarantine
 
 N_DOCS = 36  # 6 full corruption cycles: every bucket populated
 
 
-def _corpus_rows() -> list[dict]:
+def _corpus_rows() -> list[tuple[str, bytes]]:
     rows = []
     for doc_id in range(N_DOCS):
         fname, payload = _quarantine_corpus_member(doc_id)
-        rows.append(
-            {"path": f"/stream/{fname}", "content_b64": base64.b64encode(payload).decode()}
-        )
+        rows.append((f"/stream/{fname}", payload))
     return rows
 
 
@@ -43,75 +34,16 @@ def _expected_buckets() -> dict[str, tuple[int, int]]:
     return {k: (v[0], v[1]) for k, v in out.items()}
 
 
-def _poll(spark, q, table, pred, timeout=90):
-    deadline = time.time() + timeout
-    while time.time() < deadline:
-        if q.exception():
-            raise AssertionError(str(q.exception()))
-        rows = spark.table(table).collect()
-        if pred(rows):
-            return rows
-        time.sleep(1)
-    raise AssertionError(f"timeout; rows={spark.table(table).collect()}")
-
-
-def test_streaming_quarantine_matches_batch_buckets(spark, tmp_path):
-    src = tmp_path / "files_in"
-    src.mkdir()
-    rows = _corpus_rows()
-    # two micro-batches so the aggregate provably accumulates across them
-    with open(src / "b1.json", "w") as f:
-        f.write("\n".join(json.dumps(r) for r in rows[: N_DOCS // 2]))
-
-    schema = StructType(
-        [StructField("path", StringType()), StructField("content_b64", StringType())]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-        .select("path", F.unbase64("content_b64").alias("content"))
-    )
-    counts = streaming_decode_quarantine(stream)
-    q = (
-        counts.writeStream.format("memory")
-        .queryName("quarantine_out")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        _poll(
-            spark, q, "quarantine_out",
-            lambda rs: sum(r["n_docs"] for r in rs) == N_DOCS // 2,
-        )
-        with open(src / "b2.json", "w") as f:
-            f.write("\n".join(json.dumps(r) for r in rows[N_DOCS // 2 :]))
-        expected = _expected_buckets()
-        got = _poll(
-            spark, q, "quarantine_out",
-            lambda rs: {r["reason"]: (r["n_docs"], r["n_verified"]) for r in rs}
-            == expected,
-        )
-        assert {r["reason"] for r in got} == set(expected)
-    finally:
-        q.stop()
-
-
-def test_streaming_quarantine_per_file_routing_is_stateless(spark, tmp_path):
+def test_streaming_quarantine_per_file_routing_is_stateless(spark):
     """The pre-aggregate stage (decode + route) must itself be append-safe:
-    run the shared kernel on a batch DataFrame of the same records and
-    check every row routed to the schedule's bucket — the property the
-    streaming aggregate then merely counts."""
+    run the shared kernel on a batch DataFrame of the corpus and check
+    every row routed to the schedule's bucket."""
     from trike_spark.queries.multimodal import (
         _QUARANTINE_SCHEMA,
         _decode_or_quarantine_batch,
     )
 
-    rows = [
-        (r["path"], base64.b64decode(r["content_b64"])) for r in _corpus_rows()
-    ]
-    df = spark.createDataFrame(rows, "path string, content binary")
+    df = spark.createDataFrame(_corpus_rows(), "path string, content binary")
     per = (
         df.select("path", "content")
         .mapInPandas(_decode_or_quarantine_batch, schema=_QUARANTINE_SCHEMA)

@@ -1090,50 +1090,6 @@ def curation_embedding_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def dsir_llr_entries(corpus: DataFrame) -> tuple[list[tuple[str, float]], float]:
-    """Materialize the DSIR unigram log-likelihood-ratio table off a corpus
-    DataFrame (doc_id, lang, text): returns ([(token, llr)], oov_llr),
-    with llr values rounded exactly as :func:`curation_dsir_topk` rounds
-    them and ``oov_llr`` the smoothed ratio an unseen token gets
-    (ln((n_raw + V) / (n_tgt + V)) — c = 0 on both sides).
-
-    This is the model artifact the streaming twin broadcasts: the LM is
-    vocabulary-sized (MBs at 100 TB corpus scale), so collecting it to the
-    driver and shipping it as a literal map is the standard deployment
-    shape for scoring an unbounded stream against a fixed reference model.
-    """
-    import math
-
-    tok = corpus.select("lang", F.explode(F.split("text", " ")).alias("t"))
-    raw_c = tok.groupBy("t").agg(F.count(F.lit(1)).alias("c_raw"))
-    tgt_c = (
-        tok.filter(F.col("lang") == DSIR_TARGET_LANG)
-        .groupBy("t")
-        .agg(F.count(F.lit(1)).alias("c_tgt"))
-    )
-    vocab = raw_c.join(tgt_c, "t", "left").select(
-        "t", "c_raw", F.coalesce("c_tgt", F.lit(0)).alias("c_tgt")
-    ).collect()
-    n_raw = float(sum(r["c_raw"] for r in vocab))
-    n_tgt = float(sum(r["c_tgt"] for r in vocab))
-    v = float(len(vocab))
-    entries = [
-        (
-            r["t"],
-            round(
-                math.log(
-                    ((r["c_tgt"] + 1.0) / (n_tgt + v))
-                    / ((r["c_raw"] + 1.0) / (n_raw + v))
-                ),
-                6,
-            ),
-        )
-        for r in vocab
-    ]
-    oov = round(math.log((1.0 / (n_tgt + v)) / (1.0 / (n_raw + v))), 6)
-    return entries, oov
-
-
 # --- DSIR Gumbel-top-k resampling --------------------------------------------
 
 DSIR_SAMPLE_K = 20

@@ -728,10 +728,7 @@ def minhash_buckets_df(docs: DataFrame) -> DataFrame:
 
     Narrow-only (shingle → hash → array-side minhash → band md5 →
     explode), so the exact same plan runs over a static table or a
-    streaming micro-batch — the streaming incremental-dedup twin
-    (:func:`trike_spark.streaming.analytics.streaming_lsh_dedup_probe`)
-    reuses it verbatim, which is what guarantees stream/batch bucket
-    parity."""
+    streaming micro-batch."""
     sigs = (
         docs.select("doc_id", _trigrams().alias("shingles"))
         .select(

@@ -2381,18 +2381,17 @@ RATE_LIMIT = 5  # max events allowed inside it
     """,
     doc=(
         f"Retrospective rate-limit audit: events whose trailing-24h per-user "
-        f"count exceeds {RATE_LIMIT} — the batch forensics face of the "
-        "streaming token-bucket throttle."
+        f"count exceeds {RATE_LIMIT} — the batch forensics face of "
+        "rate limiting."
     ),
 )
 def events_rate_limit_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The audit query behind every abuse investigation: for each event,
     how many events did this user emit in the trailing day, and which
-    events breached the limit? The streaming token bucket
-    (streaming/throttle.py) ENFORCES admission in flight; this face
-    measures violations retrospectively over the archive — the pair every
-    rate-limit deployment needs (enforce online, audit offline, tune the
-    limit from the audit).
+    events breached the limit? An online limiter enforces admission in
+    flight; this face measures violations retrospectively over the
+    archive — the pair every rate-limit deployment needs (enforce online,
+    audit offline, tune the limit from the audit).
 
     Scale shape: one shuffle on user_id, then an event-time RANGE frame
     per user (frame state bounded by the window's event count, not
@@ -2857,9 +2856,7 @@ def events_alert_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     the evidence both implement the greedy faithfully.
 
     Scale shape: one user_id shuffle of error events only (pre-filtered
-    at the scan); per-group state is one timestamp. The streaming
-    equivalent is the token-bucket face with capacity 1 and a time
-    refill; this is its batch/forensics twin."""
+    at the scan); per-group state is one timestamp."""
     import pandas as pd
 
     e = load_table(spark, sf_dir, "events")
@@ -3820,17 +3817,17 @@ def _sql_zone_boxes() -> str:
         "Geofence entry detection: event positions (synthetic meters) "
         "against five broadcast rectangular zones — first-entry timestamp "
         "and ping count per (user, zone); the transit/fleet alerting "
-        "primitive, batch face of the streaming twin."
+        "primitive."
     ),
 )
 def events_geofence_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Geofencing — 'tell me when a vehicle/user enters a zone' — is the
     canonical spatial-stream primitive of the transit domain this
     engine's reference lives in (trike proxies vehicle OCS messages; the
-    obvious downstream consumer is exactly this query). The batch face
-    pins the semantics the streaming twin must reproduce: containment
-    against a BROADCAST zone dimension (zones are always tiny next to
-    the ping stream) and first-entry = MIN(event time) per (user, zone).
+    obvious downstream consumer is exactly this query). The face pins
+    the semantics: containment against a BROADCAST zone dimension (zones
+    are always tiny next to the ping stream) and first-entry = MIN(event
+    time) per (user, zone).
 
     Determinism: positions are md5-derived integer meters; containment
     is integer range predicates; first-entry is an exact MIN over
@@ -3840,9 +3837,7 @@ def events_geofence_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     zones — still broadcast-sized); the containment join is a narrow
     broadcast-probe fused after the scan (no shuffle on the ping side);
     the only exchange is the final (user, zone)-keyed rollup with
-    map-side combine. The streaming twin keeps the same plan with the
-    rollup running as watermarked state (`streaming/geofence.py`,
-    parity-tested)."""
+    map-side combine."""
     from trike_spark.queries.dedup import _h60
 
     e = load_table(spark, sf_dir, "events")

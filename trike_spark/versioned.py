@@ -211,44 +211,20 @@ def foreach_batch_committer(path: str):
     side reads."""
 
     def _commit(df: DataFrame, batch_id: int) -> None:
-        _commit_batch_once(df, path, batch_id, mode="append")
+        for m in history(path):
+            if m.get("batch_id") == batch_id:
+                return  # replay of an already-committed micro-batch
+        v = commit(df, path, mode="append")
+        mp = _manifest_path(path, v)
+        with open(mp) as f:
+            manifest = json.load(f)
+        manifest["batch_id"] = batch_id
+        tmp = mp + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(manifest, f)
+        os.rename(tmp, mp)
 
     return _commit
-
-
-def _commit_batch_once(df: DataFrame, path: str, batch_id: int, mode: str) -> None:
-    """Shared exactly-once micro-batch commit: skip batchIds already in
-    the manifest ledger, then commit and stamp the batchId atomically."""
-    for m in history(path):
-        if m.get("batch_id") == batch_id:
-            return  # replay of an already-committed micro-batch
-    v = commit(df, path, mode=mode)
-    mp = _manifest_path(path, v)
-    with open(mp) as f:
-        manifest = json.load(f)
-    manifest["batch_id"] = batch_id
-    tmp = mp + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.rename(tmp, mp)
-
-
-def foreach_batch_publisher(path: str):
-    """Exactly-once streaming OVERWRITE publish into a versioned table —
-    the serving-table flavor of :func:`foreach_batch_committer`. Each
-    refresh of a recompute-the-readout sink (leaderboards, decision
-    tables) becomes a NEW snapshot that logically replaces the previous
-    one: readers get an atomic manifest flip instead of a torn
-    ``mode("overwrite")`` directory rewrite, yesterday's serving tables
-    stay time-travelable until ``expire_snapshots``, and micro-batch
-    replays are deduped by the same batchId ledger as the append
-    committer. This is the default sink path for the trending/SPRT
-    streaming twins — the lakehouse contract, not opt-in."""
-
-    def _publish(df: DataFrame, batch_id: int) -> None:
-        _commit_batch_once(df, path, batch_id, mode="overwrite")
-
-    return _publish
 
 
 def expire_snapshots(path: str, keep_last_n: int = 2) -> dict:
