@@ -180,9 +180,11 @@ def main() -> None:
 
     from trike_spark.cache import release_checkpoints
 
-    # Warm-up pass: JVM JIT, whole-stage codegen compile, parquet footer
-    # cache. We benchmark steady-state execution, which is what a long-lived
-    # cluster sees; cold-start is a one-time cost amortized over a session.
+    # Warm-up pass: JVM JIT, whole-stage codegen compile, and the session's
+    # parquet schema cache (trike_spark.io.load_table infers each table's
+    # schema once per session). We benchmark steady-state execution, which
+    # is what a long-lived cluster sees; cold-start is a one-time cost
+    # amortized over a session.
     for name in names:
         REGISTRY[name].fn(spark, sf_dir).collect()
         release_checkpoints()

@@ -63,6 +63,18 @@ def test_release_restores_lineage_logger_level(spark):
     assert (level(), own()) == before
 
 
+def test_kcore_leaves_one_checkpoint_per_round(spark):
+    """The k-core face checkpoints the round-0 edges and one degree table
+    per round, nothing more."""
+    from trike_spark import cache
+    from trike_spark.queries.graph_analytics import KCORE_ROUNDS, graph_kcore_peeling
+
+    release_checkpoints()
+    graph_kcore_peeling(spark, SF_DIR).collect()
+    assert len(cache._TRACKED) == KCORE_ROUNDS + 2
+    release_checkpoints()
+
+
 def test_bfs_frees_superseded_generations(spark):
     """Each BFS round frees the visited set and frontier it supersedes, so
     the cached blocks the loop leaves live do not grow with the hop count.

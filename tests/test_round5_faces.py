@@ -5,6 +5,8 @@ cell. All at sf0.001 (the smoke scale)."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -90,6 +92,37 @@ def test_kcore_counts_monotone_and_terminal_core_valid(spark):
         final_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
         n_bad = final_deg.filter(F.col("d") < KCORE_K).count()
         assert n_bad == 0, "terminal induced subgraph is not a valid k-core"
+
+
+def _peel_reference(edges: list[tuple[int, int]], k: int, rounds: int) -> list[tuple]:
+    """Synchronous k-peeling in plain Python: (round, nodes, edges) per round."""
+    out = []
+    live = list(edges)
+    for r in range(rounds + 1):
+        deg = Counter(src for src, _ in live)
+        out.append((r, len(deg), sum(deg.values())))
+        keep = {n for n, d in deg.items() if d >= k}
+        live = [(a, b) for a, b in live if a in keep and b in keep]
+    return out
+
+
+def test_kcore_census_matches_python_peel_on_a_cascade(spark):
+    """A 4-cycle with a 4-node tail peels one tail node per round, and a
+    star's hub loses its leaves in round 1 and itself after: the census
+    must follow the reference peel through every round, which the purchase
+    graph (flat after round 1 at every test SF) cannot show."""
+    from trike_spark.cache import release_checkpoints
+    from trike_spark.queries.graph_analytics import _kcore_census
+
+    und = [(1, 2), (2, 3), (3, 4), (4, 1), (4, 5), (5, 6), (6, 7), (7, 8),
+           (10, 11), (10, 12), (10, 13)]
+    edges = [e for a, b in und for e in ((a, b), (b, a))]
+    want = _peel_reference(edges, 2, 5)
+    assert [n for _, n, _ in want] == [12, 7, 6, 5, 4, 4]  # cascades 3+ rounds
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = sorted(tuple(r) for r in _kcore_census(df, 2, 5).collect())
+    release_checkpoints()
+    assert got == want
 
 
 def test_ivfpq_results_come_from_probed_cell(spark):

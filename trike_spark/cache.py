@@ -40,9 +40,6 @@ _TRACKED: list[tuple[SparkSession, int]] = []
 # Logger of the WARN Spark emits when a locally checkpointed RDD is unpersisted.
 _LINEAGE_LOGGER = "org.apache.spark.rdd.MapPartitionsRDD"
 
-# Sessions whose checkpoint dir has been pointed at SPARK_CHECKPOINT_DIR.
-_CKPT_DIR_SET: set[int] = set()
-
 
 def _persistent_ids(spark: SparkSession) -> set[int]:
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
@@ -55,10 +52,11 @@ def checkpoint(df: DataFrame) -> DataFrame:
     spark = df.sparkSession
     ckpt_dir = os.environ.get("SPARK_CHECKPOINT_DIR")
     if ckpt_dir:
-        key = id(spark)
-        if key not in _CKPT_DIR_SET:
-            spark.sparkContext.setCheckpointDir(ckpt_dir)
-            _CKPT_DIR_SET.add(key)
+        # marked on the context itself: an id() of a stopped one can be reused
+        sc = spark.sparkContext
+        if getattr(sc, "_trike_ckpt_dir", None) != ckpt_dir:
+            sc.setCheckpointDir(ckpt_dir)
+            sc._trike_ckpt_dir = ckpt_dir
         out = df.checkpoint(eager=True)
         # Reliable checkpoints live as files, not block-manager entries —
         # nothing to track; release(out) is a clean no-op.

@@ -5,11 +5,24 @@ Scale note: scans are plain ``spark.read.parquet`` so Catalyst keeps full
 control of predicate pushdown, column pruning and partition pruning — at
 100 TB the lineitem scan must only read the columns/row-groups a query
 touches, which ``.explain`` confirms via PushedFilters/ReadSchema.
+
+Schema cache: inferring a parquet schema is a Spark job (about 0.1 s on a
+4-core host, whatever the table's size), so a query that loads five tables
+paid five jobs before it ran. :func:`load_table` keeps the schema Spark
+inferred for each table file on the session that read it and hands it back
+to later reads of the same file through ``spark.read.schema(...)``. An
+entry holds only while the file keeps its inode, mtime and size and the
+session keeps the values of the confs that map parquet types to Spark
+types (``_TYPE_MAPPING_CONFS``); otherwise the schema is inferred again.
+Directories, non-local URIs and paths ``os.stat`` cannot see are not
+cached. Every call still returns a new, lazy scan, so self-joins get
+distinct attribute ids and pushdown is unchanged.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,16 +34,56 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+# Session confs that decide how parquet types map to Spark types: a cached
+# schema is valid only under the values it was inferred with.
+_TYPE_MAPPING_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema inference job skipped
+    when this session has already inferred the schema of the same local
+    file under the same type-mapping confs (see the module docstring)."""
+    try:
+        st = None if "://" in path else os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    real = os.path.realpath(path)
+    valid_for = (
+        (st.st_ino, st.st_mtime_ns, st.st_size),
+        tuple(spark.conf.get(c, None) for c in _TYPE_MAPPING_CONFS),
+    )
+    schemas = vars(spark).setdefault("_trike_parquet_schemas", {})
+    hit = schemas.get(real)
+    if hit is not None and hit[0] == valid_for:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    schemas[real] = (valid_for, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one testdata table. No .cache(), no .collect() — the plan stays
     lazy so downstream filters push into the parquet reader. Side-effect
     free apart from the once-per-session conf adaptation (see
-    :func:`trike_spark.session.ensure_session_confs`)."""
+    :func:`trike_spark.session.ensure_session_confs`) and the session's
+    schema cache: the first load of a table file infers its schema (one
+    Spark job), later loads in the same session reuse it (none) until the
+    file's inode/mtime/size or a type-mapping conf changes. Directories
+    are not cached."""
     from trike_spark.session import ensure_session_confs
 
     if name not in TESTDATA_TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TESTDATA_TABLES}")
     ensure_session_confs(spark)
+    df = _read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         # events.parquet has shipped in two layouts: TIMESTAMP(NANOS)
         # (arrives as bigint under nanosAsLong) and TIMESTAMP(MICROS)
@@ -38,9 +91,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # actually read so either layout yields a micros TIMESTAMP column
         # with identical values; nanosAsLong stays set for back-compat and
         # is a no-op for micros files.
-        from pyspark.sql import functions as F
-
-        df = spark.read.parquet(table_path(sf_dir, name))
         ts_dtype = dict(df.dtypes)["ts"]
         if ts_dtype == "bigint":
             # nanos-as-long: truncate to micros (data is micro-precision,
@@ -51,8 +101,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # tz is UTC, see ensure_session_confs); cast so downstream
             # window/interval ops see one consistent TIMESTAMP type.
             return df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(table_path(sf_dir, name))
+    return df
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

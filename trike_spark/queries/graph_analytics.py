@@ -15,8 +15,9 @@ ranks) with the same engine rules as everything else here:
   * **Unrolled, bounded rounds** of node-keyed joins and aggregations —
     at 100 TB each round shuffles O(V) (node, value) pairs, never
     adjacency lists. One builder makes the edge set (``_purchase_edges``),
-    which each face checkpoints once; ``_lpa_labels`` and ``_bfs`` hold
-    the LPA rounds and the BFS frontier loop.
+    which each face checkpoints once; ``_lpa_labels``, ``_bfs`` and
+    ``_kcore_census`` hold the LPA rounds, the BFS frontier loop and the
+    k-core peeling rounds.
   * Degree buckets via an explicit power-of-two CASE chain — integer
     comparisons only, no log2 float round-off at bucket edges.
 """
@@ -712,41 +713,51 @@ def graph_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent), so synchronous rounds are deterministic and the
     unrolled DuckDB oracle matches bit-for-bit; all counts are BIGINT.
 
-    Scale shape: per round ONE keyed degree count plus TWO node-keyed
-    semi-join-shaped inductions (the survivor list is O(V) and broadcasts
-    at |V| ≪ |E|); edges are checkpointed per round so plan depth stays
-    constant (same discipline as the CC/PageRank/BFS loops). Rounds are
+    Scale shape: per round ONE keyed degree count, checkpointed, over the
+    live edges — the round-0 edge checkpoint rescanned as a map-side
+    filter (two semi-joins) against ONE O(V) broadcast of the previous
+    round's survivors, instead of writing a shrinking edge checkpoint
+    each round. Plan depth stays constant because each round reads only
+    checkpoints (same discipline as the CC/PageRank/BFS loops). Rounds are
     bounded and unrolled — production k-core on a 100 TB graph fixes the
     round budget and reports the trajectory, exactly what this face emits
     (round → surviving nodes/edges)."""
     # LONG node ids: the face only outputs per-round COUNTS, so the
     # oracle's "c…"/"s…" strings would be pure shuffle/compare overhead.
     edges = cache.checkpoint(_purchase_edges(spark, sf_dir, long_ids=True))
+    return _kcore_census(edges, KCORE_K, KCORE_ROUNDS)
 
-    # ONE |V|-row degree table per round serves the census AND the
-    # survivor filter: n_nodes = |deg| (every src with ≥1 edge has a deg
-    # row) and n_edges = Σd (the doubled edge list counts each row once
-    # under its src) — the same longs count_distinct(src)/count(*) gave,
-    # without a second full-edge aggregation pass per round.
+
+def _kcore_census(edges: DataFrame, k: int, rounds: int) -> DataFrame:
+    """``(round, n_nodes, n_edges)`` for rounds 0..``rounds`` of
+    synchronous k-peeling of the symmetric edge list ``edges`` (src, dst).
+
+    Survivor sets only shrink: a node with degree ≥ k in round r has an
+    edge in round r, so it survived round r−1. The live edges of round r
+    are therefore ``edges`` restricted to the previous round's survivors
+    at both ends, and each round checkpoints only its degree table.
+
+    ONE |V|-row degree table per round serves the census AND the survivor
+    filter: n_nodes = |deg| (every src with ≥1 edge has a deg row) and
+    n_edges = Σd (the doubled edge list counts each row once under its
+    src) — the same longs count_distinct(src)/count(*) gave, without a
+    second full-edge aggregation pass per round."""
     out: DataFrame | None = None
-    for r in range(0, KCORE_ROUNDS + 1):
-        deg = cache.checkpoint(
-            edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-        )
+    live = edges
+    for r in range(rounds + 1):
+        deg = cache.checkpoint(live.groupBy("src").agg(F.count(F.lit(1)).alias("d")))
         cnt = deg.agg(
             F.lit(r).cast("int").alias("round"),
             F.count(F.lit(1)).alias("n_nodes"),
             F.coalesce(F.sum("d"), F.lit(0)).cast("bigint").alias("n_edges"),
         )
         out = cnt if out is None else out.unionByName(cnt)
-        if r == KCORE_ROUNDS:
+        if r == rounds:
             break
-        keep = deg.filter(F.col("d") >= KCORE_K).select(F.col("src").alias("node"))
-        edges = cache.checkpoint(
-            edges.join(
-                broadcast(keep.withColumnRenamed("node", "src")), "src"
-            ).join(broadcast(keep.withColumnRenamed("node", "dst")), "dst")
-            .select("src", "dst")
+        # one broadcast, probed for both endpoints, so its exchange is reused
+        keep = broadcast(deg.filter(F.col("d") >= k).select(F.col("src").alias("node")))
+        live = edges.join(keep, F.col("src") == F.col("node"), "left_semi").join(
+            keep, F.col("dst") == F.col("node"), "left_semi"
         )
     return out
 

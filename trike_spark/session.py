@@ -190,9 +190,6 @@ def get_spark(app_name: str = "trike_spark", config: EngineConfig | None = None)
     return builder.getOrCreate()
 
 
-_ADAPTED_SESSIONS: set[int] = set()
-
-
 def ensure_session_confs(spark: SparkSession) -> None:
     """Adapter for CALLER-PROVIDED sessions (the correctness driver builds
     its own plain SparkSession): idempotently pin the two runtime-settable
@@ -204,13 +201,15 @@ def ensure_session_confs(spark: SparkSession) -> None:
     Runs once per session object: repeated ``load_table`` calls must not
     keep mutating shared session state as a read side effect (a conf flip
     mid-flight by a concurrent caller would otherwise be silently undone).
+    The mark lives on the session object itself, like ``trike_spark.io``'s
+    schema cache, so a new session never inherits it (an ``id()`` of a
+    collected session can be reused by the next one).
     Contract for callers who manage their own session: either route reads
     through ``trike_spark.io`` (which calls this) or set these two confs
     themselves.
     """
-    key = id(spark)
-    if key in _ADAPTED_SESSIONS:
+    if vars(spark).get("_trike_confs_pinned"):
         return
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    _ADAPTED_SESSIONS.add(key)
+    spark._trike_confs_pinned = True
