@@ -10,13 +10,13 @@ runtime from real statistics.
 
 Shuffle partitions follow one rule: one partition per task slot of the
 master the session is built on (``local[N]``/``local[N,F]`` → N,
-``local[*]`` → the CPUs this process may run on, ``local-cluster[n,c,m]``
-→ n·c). Any other master leaves ``spark.sql.shuffle.partitions`` to the
-deployment, and ``SPARK_SHUFFLE_PARTITIONS`` overrides the rule. The count
-matters most inside a stream, where Spark turns AQE off: the framing
-operator keeps one state store per shuffle partition, so every trigger
-runs (and commits) that many stateful tasks. A running query keeps the
-count its checkpoint was created with.
+``local[*]`` → the CPUs this process may run on). Any other master leaves
+``spark.sql.shuffle.partitions`` to the deployment, and
+``SPARK_SHUFFLE_PARTITIONS`` overrides the rule. The count matters most
+inside a stream, where Spark turns AQE off: the framing operator keeps one
+state store per shuffle partition, so every trigger runs (and commits)
+that many stateful tasks. A running query keeps the count its checkpoint
+was created with.
 """
 
 from __future__ import annotations
@@ -27,17 +27,13 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
-_LOCAL_CLUSTER = re.compile(r"local-cluster\[\s*(\d+)\s*,\s*(\d+)\s*,\s*(\d+)\s*\]")
 _LOCAL = re.compile(r"local(?:\[\s*(\d+|\*)\s*(?:,\s*\d+\s*)?\])?")
 
 
 def task_slots(master: str) -> int | None:
     """Tasks the master runs at once: ``local`` → 1, ``local[N]`` and
-    ``local[N,F]`` → N, ``local[*]`` → the CPUs this process may run on,
-    ``local-cluster[n,c,m]`` → n·c. None for any other master, whose size
-    only the deployment knows."""
-    if m := _LOCAL_CLUSTER.fullmatch(master):
-        return int(m.group(1)) * int(m.group(2))
+    ``local[N,F]`` → N, ``local[*]`` → the CPUs this process may run on.
+    None for any other master, whose size only the deployment knows."""
     if m := _LOCAL.fullmatch(master):
         n = m.group(1) or "1"
         return len(os.sched_getaffinity(0)) if n == "*" else int(n)
@@ -65,38 +61,6 @@ class EngineConfig:
             env = os.environ.get("SPARK_SHUFFLE_PARTITIONS")
             slots = int(env) if env else task_slots(self.master)
             object.__setattr__(self, "shuffle_partitions", slots)
-
-
-def _heap_mb(spec: str) -> int:
-    """JVM memory string ('8g', '4096m', '512k', bare MB count) → MB."""
-    s = spec.strip().lower()
-    units = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
-    if s and s[-1] in units:
-        return int(float(s[:-1]) * units[s[-1]])
-    return int(s)  # Spark treats a bare number in the master string as MB
-
-
-def _check_local_cluster_memory(master: str) -> None:
-    """Fail fast when local-cluster[n, c, m]'s worker capacity m (MB) can't
-    fit the configured executor heap: executors then never register and the
-    job HANGS with no diagnostic (observed under the stream bench). The
-    master string sizes the WORKER; the executor still launches at
-    spark.executor.memory — both knobs must agree."""
-    m = _LOCAL_CLUSTER.fullmatch(master)
-    if not m:
-        raise ValueError(
-            f"malformed local-cluster master {master!r} "
-            "(expected local-cluster[n,cores,memoryMB])"
-        )
-    worker_mb = int(m.group(3))
-    executor_mb = _heap_mb(os.environ.get("SPARK_EXECUTOR_MEMORY", "8g"))
-    if worker_mb < executor_mb:
-        raise ValueError(
-            f"local-cluster worker memory {worker_mb} MB < executor heap "
-            f"{executor_mb} MB (spark.executor.memory): executors cannot "
-            "register and the job hangs. Raise the master string's third "
-            "field or lower SPARK_EXECUTOR_MEMORY."
-        )
 
 
 def get_spark(app_name: str = "trike_spark", config: EngineConfig | None = None) -> SparkSession:
@@ -150,40 +114,6 @@ def get_spark(app_name: str = "trike_spark", config: EngineConfig | None = None)
     # nanos-as-long for the events table's TIMESTAMP(NANOS) column — set at
     # build time here; ensure_session_confs covers foreign sessions.
     builder = builder.config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # local-cluster[n,c,m] rehearses REAL multi-executor execution (separate
-    # executor JVMs + their own Python workers, network shuffle, broadcast
-    # over the wire) on one machine — the scale-out posture the stream
-    # bench measures (tools/stream_bench.py --master local-cluster[...]).
-    # Executor Python processes don't inherit the driver's sys.path, so
-    # ship the repo root; executor heap comes from the master string.
-    if cfg.master.startswith("local-cluster"):
-        _check_local_cluster_memory(cfg.master)
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        builder = (
-            builder.config(
-                "spark.executorEnv.PYTHONPATH",
-                os.pathsep.join([repo_root, os.environ.get("PYTHONPATH", "")]).rstrip(
-                    os.pathsep
-                ),
-            )
-            # The streaming micro-batch planner recurses a Java regex over
-            # a long generated string during cluster-mode planning; the
-            # default 1 MiB thread stack overflows (measured: framing
-            # pipeline dies with StackOverflowError in the stream
-            # execution thread under local-cluster, fine at -Xss64m).
-            # Wide stacks are cheap (virtual memory, committed on use).
-            .config("spark.driver.extraJavaOptions", "-Xss64m")
-            .config("spark.executor.extraJavaOptions", "-Xss64m")
-            # The master string's third field is the WORKER's capacity;
-            # executors still launch at spark.executor.memory (default
-            # 1g — measured OOM under the stream bench's backlog
-            # batches). Size the executor heap explicitly and keep the
-            # master's MB at least this large.
-            .config(
-                "spark.executor.memory",
-                os.environ.get("SPARK_EXECUTOR_MEMORY", "8g"),
-            )
-        )
     # Only set master when not already inside a cluster-provided session.
     if "SPARK_CONNECT_MODE_ENABLED" not in os.environ:
         builder = builder.master(cfg.master)

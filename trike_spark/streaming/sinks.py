@@ -19,12 +19,11 @@ Design:
     upstream resend, proxy.ex:203). Deterministic CloudEvent ids make
     downstream dedup possible.
 
-Scale: the per-batch group-and-encode is a distributed aggregation; the
-put loop runs per key, and keys are independent — on a real cluster use
-``df.repartition("partitionkey").foreachPartition`` so each executor owns
-a disjoint key range and its own client. The driver-side loop below is the
-local[*] / test configuration, where records-per-batch = O(live keys), not
-O(events).
+Scale: the per-batch group-and-encode is a distributed aggregation; only
+its result reaches the driver. The put loop runs on the driver, so the
+``.collect()`` it iterates is bounded by the live (key, chunk) rows of the
+micro-batch, not by its events. The sequence ledger lives on the sink
+object, so each key's chain persists across micro-batches.
 """
 
 from __future__ import annotations
@@ -221,82 +220,6 @@ class KinesisSink:
                 (time.perf_counter() - t0) * 1e3,
             )
             self._last_seq[key] = resp["SequenceNumber"]
-
-
-@dataclass
-class DistributedKinesisSink:
-    """Executor-side variant for cluster scale: after the per-key batch
-    encode, records repartition BY KEY and each executor partition puts its
-    disjoint key set with its own client (created from a picklable
-    factory). One writer per key per batch ⇒ per-key order within a batch;
-    cross-batch order rides on Kinesis' per-PartitionKey ordering with a
-    single in-flight writer per key (the repartition guarantees that) —
-    the SequenceNumberForOrdering ledger is per-batch here, since executor
-    state doesn't persist across batches.
-
-    The driver-side :class:`KinesisSink` is the strict-chaining
-    configuration (exact reference semantics, proxy.ex:177-204); this one
-    is the horizontal-scale configuration. Both are at-least-once.
-    """
-
-    stream: str
-    client_factory: Callable[[], Any]
-    max_record_bytes: int = KINESIS_MAX_RECORD_BYTES
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        records = (
-            _encoded_records(batch_df, self.max_record_bytes)
-            .repartition("partitionkey")
-            # per-key chunks must put in chunk order on one writer
-            .sortWithinPartitions("partitionkey", "chunk")
-        )
-        stream, factory = self.stream, self.client_factory
-
-        def put_partition(rows) -> None:
-            client = factory()
-            last_seq: dict[str, str] = {}
-            for row in rows:
-                resp = client.put_record(
-                    stream,
-                    row["partitionkey"],
-                    row["record"],
-                    sequence_number_for_ordering=last_seq.get(row["partitionkey"]),
-                )
-                last_seq[row["partitionkey"]] = resp["SequenceNumber"]
-
-        records.foreachPartition(put_partition)
-
-
-class IdempotentParquetSink:
-    """Exactly-once parquet archiving via foreachBatch: each micro-batch
-    writes to ``path/batch_id=N`` with overwrite, so a batch REPLAYED after
-    a failure (Spark re-runs the last uncommitted batch on recovery)
-    overwrites its own previous partial output instead of appending
-    duplicates. This is the standard Structured-Streaming exactly-once
-    recipe for non-transactional stores: at-least-once execution + an
-    idempotent, batch-id-keyed write = exactly-once effect.
-
-    Complements the Kinesis leg (at-least-once + deterministic CloudEvent
-    ids for downstream dedup, proxy.ex:203): the archive is where replays
-    (kinesis_source.ex:123-147 / sources.parse_kinesis_records) read from,
-    so IT must not contain duplicates. Downstream scans prune on the
-    ``batch_id`` partition column like any other partition.
-    """
-
-    def __init__(self, path: str, partition_extra: list[str] | None = None) -> None:
-        self.path = path
-        self.partition_extra = list(partition_extra or [])
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id", *self.partition_extra)
-            # dynamic overwrite: only THIS batch's partition is replaced;
-            # static overwrite would wipe the whole archive
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(self.path)
-        )
 
 
 def write_stream_to_kinesis(
