@@ -40,6 +40,16 @@ def task_slots(master: str) -> int | None:
     return None
 
 
+# why each is set: see get_spark
+STREAMING_CONFS = {
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+    ),
+    "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+}
+LOCAL_DRIVER_JAVA_OPTIONS = "-Xss16m"
+
+
 @dataclass(frozen=True)
 class EngineConfig:
     """Session configuration, env-overridable. Trike's other runtime
@@ -78,6 +88,42 @@ def get_spark(app_name: str = "trike_spark", config: EngineConfig | None = None)
       * Arrow enabled for every pandas interchange (the two stateful ops).
       * UTC session timezone so results are oracle-comparable and
         cluster-location-independent.
+
+    Streaming settings (they act on streaming queries only):
+      * ``checkpointFileManagerClass`` = Spark's FileSystem-based manager.
+        The default FileContext manager renames through Hadoop's
+        ``FileContext``, which without libhadoop forks a ``readlink`` for
+        the source and the target of every checkpoint file and of its
+        ``.crc``: about 100 forks per ingest trigger, 20 of them per
+        state-store commit. The FileSystem manager renames with
+        ``File.renameTo`` (one atomic POSIX rename on local disk) and keeps
+        both checksum layers, Hadoop's ``.crc`` files and Spark's
+        ``checkpoint.fileChecksum`` files. On a store other than local
+        disk: HDFS ``FileSystem.rename`` refuses an existing target where
+        ``FileContext`` overwrites it. The manager checks the target
+        itself: where the caller forbids an overwrite it raises
+        ``FileAlreadyExistsException``, and where the caller allows one, a
+        rename refused onto an existing file leaves that file in place
+        (written by an earlier attempt at the same version).
+      * ``noDataMicroBatches.enabled=false``. Under the framing operator's
+        processing-time timeout Spark would otherwise run a 0-row batch
+        (one stateful task and one state-store commit per shuffle
+        partition) whenever a trigger ends before the source has new data,
+        only to look for expired timers. With it off, a stale timer fires
+        in the next batch that carries data on any key; when every key is
+        silent, no session closes until traffic resumes (see
+        ``framing.framed_stream``). No stream built on this session needs a
+        no-data batch: the ingest path has no watermark to flush.
+      * ``-Xss16m`` on the driver JVM for ``local`` masters, where the
+        driver is also the executor. At ``query.stop()`` Spark matches a
+        backtracking regex over the interrupted batch's error text
+        (``StreamExecution.isInterruptionException``) on the stream
+        thread, which overflows the default thread stack. It goes into
+        ``spark.driver.defaultJavaOptions``, which the launcher puts before
+        ``spark.driver.extraJavaOptions``, so a caller's own
+        ``--driver-java-options`` (which replace ``extraJavaOptions``) are
+        kept, and a caller's own ``-Xss`` wins. Like every JVM option it
+        acts only when this call launches the JVM.
     """
     cfg = config or EngineConfig()
     builder = (
@@ -100,6 +146,10 @@ def get_spark(app_name: str = "trike_spark", config: EngineConfig | None = None)
         # and env-overridable either way.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
+    for key, value in STREAMING_CONFS.items():
+        builder = builder.config(key, value)
+    if task_slots(cfg.master) is not None:
+        builder = builder.config("spark.driver.defaultJavaOptions", LOCAL_DRIVER_JAVA_OPTIONS)
     if cfg.shuffle_partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
     # RocksDB state store: bounds streaming state memory at scale (millions

@@ -11,6 +11,13 @@ Spark mapping: ``applyInPandasWithState`` keyed by ``conn_id``:
     — because framing runs BEFORE the heartbeat filter (proxy.ex:104 vs
     :242-244, proxy_test.exs:128-145). On timeout we emit a
     ``session_closed`` control row (the analog of closing the socket).
+  * when the timer fires: Spark checks timers only inside a micro-batch.
+    ``session.get_spark`` turns no-data micro-batches off, so a due timer
+    fires in the next batch that carries data on ANY key. Trike closes
+    each socket on its own timer (proxy.ex:121-127); here, while every key
+    is silent, no session closes until traffic resumes. Only state is
+    held: ``pipeline.messages_to_cloud_events`` drops ``session_closed``
+    rows before the sink, so no event is late or lost.
 
 Scale: state partitions by conn_id across the cluster; each connection's
 buffer is a few KiB (socket-buffer bounded upstream), so state size is

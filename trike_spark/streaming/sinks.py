@@ -39,6 +39,8 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from trike_spark.streaming.health import register_once
+
 logger = logging.getLogger("trike_spark.kinesis")
 
 
@@ -228,7 +230,9 @@ def write_stream_to_kinesis(
     checkpoint_dir: str,
     trigger_seconds: int | None = None,
 ):
-    """events must carry columns (partitionkey, event struct)."""
+    """events must carry columns (partitionkey, event struct). The
+    session logs one health line per micro-batch (``health.register_once``)."""
+    register_once(events.sparkSession)
     writer = (
         events.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
