@@ -13,6 +13,7 @@ from trike_spark.session import STREAMING_CONFS
 from trike_spark.streaming.framing import EOT
 
 MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+FILE_CONTEXT = "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
 
 
 def _manager_name(spark, ckpt) -> str:
@@ -30,20 +31,23 @@ def test_filecontext_checkpoint_restarts_under_filesystem_manager(spark, tmp_pat
     ckpt = tmp_path / "ckpt"
     out = tmp_path / "out"
 
-    # phase 1, default manager: a complete message and a PARTIAL frame
-    assert _manager_name(spark, ckpt) == "FileContextBasedCheckpointFileManager"
-    half1, half2 = MSG[:12], MSG[12:]
-    _write(src, "c1.json", "conn-1", MSG + EOT + half1, 0)
-    q1 = _start(spark, src, ckpt, out)
     try:
-        _poll(spark, q1, out, lambda rows: any(r["raw"] == MSG for r in rows))
-    finally:
-        q1.stop()
+        # phase 1, Spark's default FileContext manager: a complete message
+        # and a PARTIAL frame
+        spark.conf.set(MANAGER, FILE_CONTEXT)
+        assert _manager_name(spark, ckpt) == "FileContextBasedCheckpointFileManager"
+        half1, half2 = MSG[:12], MSG[12:]
+        _write(src, "c1.json", "conn-1", MSG + EOT + half1, 0)
+        q1 = _start(spark, src, ckpt, out)
+        try:
+            _poll(spark, q1, out, lambda rows: any(r["raw"] == MSG for r in rows))
+        finally:
+            q1.stop()
 
-    # phase 2, FileSystem manager: the rest of the frame arrives after the
-    # restart and stitches onto the half read back from the checkpoint
-    spark.conf.set(MANAGER, STREAMING_CONFS[MANAGER])
-    try:
+        # phase 2, FileSystem manager: the rest of the frame arrives after
+        # the restart and stitches onto the half read back from the
+        # checkpoint
+        spark.conf.set(MANAGER, STREAMING_CONFS[MANAGER])
         assert _manager_name(spark, ckpt) == "FileSystemBasedCheckpointFileManager"
         _write(src, "c2.json", "conn-1", half2 + EOT, 1)
         q2 = _start(spark, src, ckpt, out)
@@ -59,7 +63,7 @@ def test_filecontext_checkpoint_restarts_under_filesystem_manager(spark, tmp_pat
         finally:
             q2.stop()
     finally:
-        spark.conf.unset(MANAGER)
+        spark.conf.set(MANAGER, STREAMING_CONFS[MANAGER])
 
 
 def test_rocksdb_state_under_filesystem_manager(spark, tmp_path):
@@ -67,4 +71,4 @@ def test_rocksdb_state_under_filesystem_manager(spark, tmp_path):
     try:
         test_rocksdb_state.test_framing_on_rocksdb_provider(spark, tmp_path)
     finally:
-        spark.conf.unset(MANAGER)
+        spark.conf.set(MANAGER, STREAMING_CONFS[MANAGER])

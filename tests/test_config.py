@@ -1,5 +1,6 @@
 """Session config: the shuffle-partition rule with its env and explicit
-overrides, and the streaming and JVM settings get_spark adds."""
+overrides, and the streaming and JVM settings get_spark adds, which the
+test session carries too."""
 
 from __future__ import annotations
 
@@ -72,3 +73,13 @@ def test_get_spark_sets_streaming_confs_and_driver_stack(tmp_path):
     assert out["checksum"] == "true"
     assert LOCAL_DRIVER_JAVA_OPTIONS in out["jvm_args"], out["jvm_args"]
     assert f"-Djava.io.tmpdir={tmp_path}" in out["jvm_args"], out["jvm_args"]
+
+
+def test_test_session_carries_shipped_streaming_confs(spark):
+    """The tests' session runs streams under the confs get_spark ships, and
+    no earlier test has left one of them changed or unset."""
+    for key, value in STREAMING_CONFS.items():
+        assert spark.conf.get(key) == value, key
+    jvm = spark._jvm
+    jvm_args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
+    assert LOCAL_DRIVER_JAVA_OPTIONS in jvm_args, jvm_args

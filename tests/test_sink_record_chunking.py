@@ -1,16 +1,20 @@
-"""Record-size chunking in the Kinesis sinks: the public PutRecord limit
+"""Record-size chunking in the Kinesis sink: the public PutRecord limit
 is 1 MiB, which the reference never approaches (per-packet batching) but
 a micro-batch CAN — so every encoded record must be provably under the
-limit, chunks must preserve per-key arrival order across the split, and
-an unsplittable oversized event must fail loudly, not wedge the retry
-loop."""
+limit, records are filled greedily (each but a key's last could not take
+its next event), chunks must preserve per-key arrival order across the
+split, a record must be byte for byte Spark's JSON of its events, and an
+unsplittable oversized event must fail loudly before any put, not wedge
+the retry loop."""
 
 from __future__ import annotations
 
 import json
+import random
 from datetime import datetime, timedelta
 
 import pytest
+from pyspark.sql import functions as F
 
 from trike_spark.streaming.framing import FRAMED_SCHEMA
 from trike_spark.streaming.pipeline import messages_to_cloud_events
@@ -112,3 +116,67 @@ def test_oversized_single_event_fails_loudly(spark):
     ev = messages_to_cloud_events(spark.createDataFrame(rows, FRAMED_SCHEMA))
     with pytest.raises(Exception, match="chunk budget"):
         KinesisSink(stream="s", client=FakeKinesisClient(), max_record_bytes=2000)(ev, 0)
+
+
+def _shuffled_events(spark, n_per_key=40, keys=("conn-a", "conn-b", "conn-c")):
+    """Events whose payloads vary in length and carry escapes and non-ASCII,
+    handed to the sink shuffled across partitions."""
+    rows = [
+        (k, f"{4000 + i},TSCH," + 'é"\\\t' * (i % 5) + "x" * (17 * i % 90), T + timedelta(seconds=i), "message", i)
+        for k in keys
+        for i in range(n_per_key)
+    ]
+    random.Random(11).shuffle(rows)
+    return messages_to_cloud_events(spark.createDataFrame(rows, FRAMED_SCHEMA).repartition(4))
+
+
+def _event_json(ev) -> dict[tuple[str, int], str]:
+    rows = ev.select("partitionkey", "seq", F.to_json("event").alias("j")).collect()
+    return {(r["partitionkey"], r["seq"]): r["j"] for r in rows}
+
+
+def test_default_limit_record_is_spark_encoding_of_seq_ordered_events(spark):
+    ev = _shuffled_events(spark)
+    # Spark's own encoding of each key's events, ordered by seq
+    by_seq = F.sort_array(F.collect_list(F.struct("seq", "event")))
+    record = F.to_json(F.transform(by_seq, lambda x: x["event"]))
+    want = {r["partitionkey"]: r["record"] for r in ev.groupBy("partitionkey").agg(record.alias("record")).collect()}
+    client = FakeKinesisClient()
+    KinesisSink(stream="s", client=client)(ev, 0)
+    assert [c["partition_key"] for c in client.calls] == sorted(want)
+    assert {c["partition_key"]: c["data"] for c in client.calls} == want
+
+
+def test_small_limit_fills_every_record_but_a_keys_last(spark):
+    ev = _shuffled_events(spark)
+    enc = _event_json(ev)
+    limit = 2000
+    client = FakeKinesisClient()
+    KinesisSink(stream="s", client=client, max_record_bytes=limit)(ev, 0)
+    per_key: dict[str, list[str]] = {}
+    for c in client.calls:
+        per_key.setdefault(c["partition_key"], []).append(c["data"])
+    for key, records in per_key.items():
+        order = sorted(seq for k, seq in enc if k == key)
+        assert len(records) > 1, "limit did not force a split — vacuous"
+        taken = 0
+        for record, nxt in zip(records, records[1:]):
+            assert len(record.encode()) <= limit
+            taken += len(json.loads(record))
+            following = enc[(key, order[taken])]
+            # the record could not have taken the key's next event
+            assert len(record.encode()) + 1 + len(following.encode()) > limit, (key, taken)
+        taken += len(json.loads(records[-1]))
+        assert taken == len(order)
+
+
+def test_oversized_event_fails_before_any_put(spark):
+    rows = [("conn-a", f"{4000 + i},TSCH", T, "message", i) for i in range(5)] + [
+        ("conn-b", "4000,TSCH", T, "message", 0),
+        ("conn-b", "x" * 4000, T, "message", 1),
+    ]
+    ev = messages_to_cloud_events(spark.createDataFrame(rows, FRAMED_SCHEMA))
+    client = FakeKinesisClient()
+    with pytest.raises(Exception, match="chunk budget"):
+        KinesisSink(stream="s", client=client, max_record_bytes=2000)(ev, 0)
+    assert client.calls == []

@@ -10,6 +10,7 @@ from datetime import datetime
 
 from test_checkpoint_recovery import MSG, TS_FMT, _write
 
+from trike_spark.session import STREAMING_CONFS
 from trike_spark.streaming.framing import CHUNK_SCHEMA, EOT, framed_stream
 
 TIMEOUT_MS = 2000
@@ -69,4 +70,4 @@ def test_stale_timer_fires_in_next_data_batch(spark, tmp_path):
         assert all(p.numInputRows > 0 for p in progress), [(p.batchId, p.numInputRows) for p in progress]
     finally:
         q.stop()
-        spark.conf.unset(NO_DATA_BATCHES)
+        spark.conf.set(NO_DATA_BATCHES, STREAMING_CONFS[NO_DATA_BATCHES])

@@ -120,7 +120,7 @@ def test_streaming_dynamic_gap_twin_matches_batch(spark, tmp_path):
         q.stop()
 
 
-def test_append_mode_finalizes_sessions_after_watermark(spark, tmp_path):
+def test_append_mode_finalizes_sessions_after_watermark(spark, tmp_path, no_data_batches):
     """Production session semantics: in APPEND mode a session row may only
     emit once the watermark proves no more events can join it — held while
     open, emitted exactly once when closed, state purged. Complete mode

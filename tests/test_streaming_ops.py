@@ -132,7 +132,7 @@ def test_stream_stream_join_time_bounded(spark, tmp_path):
         q.stop()
 
 
-def test_stream_stream_left_outer_join_emits_null_after_watermark(spark, tmp_path):
+def test_stream_stream_left_outer_join_emits_null_after_watermark(spark, tmp_path, no_data_batches):
     """LEFT OUTER stream-stream join: a left row with no match cannot be
     emitted when it arrives — the engine must hold it until the WATERMARK
     passes the end of its join window (only then is 'no match will ever

@@ -42,7 +42,7 @@ def _write(src, name, rows, mtime=None):
         os.utime(path, (mtime, mtime))
 
 
-def test_late_event_dropped_beyond_watermark(spark, tmp_path):
+def test_late_event_dropped_beyond_watermark(spark, tmp_path, no_data_batches):
     """Deflaked (VERDICT r1 #3): all files are written BEFORE start with
     explicitly increasing mtimes; ``maxFilesPerTrigger=1`` then processes
     them as ordered micro-batches (FileStreamSource orders pending files by

@@ -27,7 +27,19 @@ import stat
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from trike_spark.schemas import TESTDATA_TABLES
+# The driver testdata tables (FIXTURES.md §B).
+TESTDATA_TABLES = (
+    "region",
+    "nation",
+    "customer",
+    "supplier",
+    "part",
+    "orders",
+    "lineitem",
+    "events",
+    "documents",
+    "embeddings",
+)
 
 
 def table_path(sf_dir: str, name: str) -> str:

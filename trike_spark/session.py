@@ -53,8 +53,9 @@ LOCAL_DRIVER_JAVA_OPTIONS = "-Xss16m"
 @dataclass(frozen=True)
 class EngineConfig:
     """Session configuration, env-overridable. Trike's other runtime
-    settings live where they are used: the stale timeout and heartbeat are
-    ``build_ingest_pipeline`` parameters, the stream name and client are
+    settings live where they are used: the stale timeout is a
+    ``build_ingest_pipeline`` parameter, the heartbeat packet is
+    ``functions.cloud_event.HEARTBEAT``, the stream name and client are
     ``KinesisSink`` fields."""
 
     master: str = field(

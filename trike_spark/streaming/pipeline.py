@@ -13,19 +13,14 @@ Works identically over a batch DataFrame (tests) and a streaming one.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from trike_spark.functions.cloud_event import HEARTBEAT, cloud_event_struct
 from trike_spark.streaming.framing import DEFAULT_STALE_TIMEOUT_MS, framed_stream
 
 
-def messages_to_cloud_events(
-    framed: DataFrame,
-    source: str = "trike-spark.local/trike",
-    heartbeat: str = HEARTBEAT,
-    source_ip: Column | None = None,
-) -> DataFrame:
+def messages_to_cloud_events(framed: DataFrame, source: str = "trike-spark.local/trike") -> DataFrame:
     """framed (FRAMED_SCHEMA) → (partitionkey, seq, event struct) rows.
 
     Heartbeats are dropped HERE — after the stateful op has already seen
@@ -36,10 +31,9 @@ def messages_to_cloud_events(
     in-order delivery, and content-sorting would shuffle events from
     different packets alphabetically.
     """
-    ip = source_ip if source_ip is not None else F.lit("")
     return (
         framed.filter(F.col("kind") == "message")
-        .filter(F.col("raw") != heartbeat)  # F2, proxy.ex:242-244
+        .filter(F.col("raw") != HEARTBEAT)  # F2, proxy.ex:242-244
         .select(
             F.col("conn_id").alias("partitionkey"),
             F.col("seq"),
@@ -47,7 +41,7 @@ def messages_to_cloud_events(
                 raw=F.col("raw"),
                 partition_key=F.col("conn_id"),
                 time=F.col("time"),
-                source_ip=ip,
+                source_ip=F.lit(""),
                 source=source,
             ).alias("event"),
         )
@@ -58,8 +52,7 @@ def build_ingest_pipeline(
     chunks: DataFrame,
     stale_timeout_ms: int = DEFAULT_STALE_TIMEOUT_MS,
     source: str = "trike-spark.local/trike",
-    heartbeat: str = HEARTBEAT,
 ) -> DataFrame:
-    """Full pipeline up to the sink: chunk stream → (partitionkey, event)."""
+    """Full pipeline up to the sink: chunk stream → (partitionkey, seq, event)."""
     framed = framed_stream(chunks, stale_timeout_ms=stale_timeout_ms)
-    return messages_to_cloud_events(framed, source=source, heartbeat=heartbeat)
+    return messages_to_cloud_events(framed, source=source)
