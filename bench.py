@@ -123,33 +123,32 @@ HEADLINE = [
 ]
 
 
-def _committed_reference() -> tuple[str | None, dict[str, float]]:
-    """Latest committed full-round idle bench (BENCH_LOCAL_r{N}.json,
-    numeric rounds only) — the per-query baseline the ambient-load flag
-    compares against. Three rounds of driver-bench flaps on the GC-heavy
-    LSH family were each adjudicated as loaded-box ambience (r8 verdict
-    item 4); carrying the committed-idle ratio and the machine load in
-    the payload ends that ambiguity at the source."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    rounds: list[tuple[int, str]] = []
-    for fn in os.listdir(here):
-        m = re.fullmatch(r"BENCH_LOCAL_r(\d+)\.json", fn)
-        if m:
-            rounds.append((int(m.group(1)), os.path.join(here, fn)))
-    if not rounds:
-        return None, {}
-    _, path = max(rounds)
-    try:
-        with open(path) as f:
-            ref = json.load(f)
-        return os.path.basename(path), dict(ref.get("queries", {}))
-    except (OSError, json.JSONDecodeError):
-        return None, {}
+def timed_runs(spark, name: str, sf_dir: str, n: int) -> list[float]:
+    """Wall times of ``n`` runs of registry query ``name``, in run order.
 
+    Each run rebuilds the DataFrame, so no shuffle stages are reused
+    across runs, and ``fn()`` is INSIDE the timer: iterative queries
+    (connected components) materialize eager checkpoints during plan
+    build, so construction is real work, not just lazy plan assembly."""
+    from trike_spark.cache import release_checkpoints
+    from trike_spark.registry import REGISTRY
 
-# A timing this much above the committed idle number is flagged as
-# "re-measure on an idle box before adjudicating a regression".
-AMBIENT_FLAG_RATIO = 1.5
+    runs: list[float] = []
+    for _ in range(n):
+        t0 = time.perf_counter()
+        REGISTRY[name].fn(spark, sf_dir).collect()
+        runs.append(time.perf_counter() - t0)
+        # untimed cleanup: each run rebuilds its checkpoints, so release
+        # the previous run's blocks or n runs accumulate n copies
+        release_checkpoints()
+    # Untimed inter-query isolation: drop any cached plans and nudge the
+    # JVM to collect. Without this, queries late in the suite time GC
+    # debt accumulated by 100+ prior jobs instead of their own plan
+    # (observed: the last query's median 3x its min at sf0.1; standalone
+    # the same query is flat).
+    spark.catalog.clearCache()
+    spark._jvm.System.gc()
+    return runs
 
 
 def main() -> None:
@@ -164,7 +163,7 @@ def main() -> None:
         loadavg = None
 
     from trike_spark.registry import REGISTRY, load_all_query_modules
-    from trike_spark.session import get_spark
+    from trike_spark.session import get_spark, task_slots
 
     load_all_query_modules()
     spark = get_spark("trike_spark-bench")
@@ -193,50 +192,18 @@ def main() -> None:
     # container are noisy (±30%), and best-of-2 could not distinguish noise
     # from regression (round-2 verdict). min = the query's actual cost;
     # median = what a user typically sees — both are persisted so
-    # round-over-round deltas are adjudicable with data. Each run rebuilds
-    # the DataFrame so no shuffle stages are reused across runs.
+    # round-over-round deltas are adjudicable with data.
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5")))
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
     for name in names:
-        runs: list[float] = []
-        for _ in range(n_runs):
-            # fn() is INSIDE the timer: iterative queries (connected
-            # components) materialize eager checkpoints during plan build,
-            # so construction is real work, not just lazy plan assembly.
-            t0 = time.perf_counter()
-            REGISTRY[name].fn(spark, sf_dir).collect()
-            runs.append(time.perf_counter() - t0)
-            # untimed cleanup: each run rebuilds its checkpoints, so release
-            # the previous run's blocks or n runs accumulate n copies
-            release_checkpoints()
-        # Untimed inter-query isolation: drop any cached plans and nudge the
-        # JVM to collect. Without this, queries late in the suite time GC
-        # debt accumulated by 100+ prior jobs instead of their own plan
-        # (observed: the last query's median 3x its min at sf0.1; standalone
-        # the same query is flat).
-        spark.catalog.clearCache()
-        spark._jvm.System.gc()
-        runs.sort()
+        runs = sorted(timed_runs(spark, name, sf_dir, n_runs))
         timings[name] = round(runs[0], 3)
         mid = len(runs) // 2
         med = runs[mid] if len(runs) % 2 else (runs[mid - 1] + runs[mid]) / 2
         medians[name] = round(med, 3)
 
     total = round(sum(timings.values()), 3)
-    ref_name, ref_queries = _committed_reference()
-    # only comparable at the reference's scale factor (full-round artifacts
-    # are sf0.1); a partial/other-sf run still reports loadavg but no ratios
-    ratios: dict[str, float] = {}
-    flagged: list[str] = []
-    if ref_queries and sf == 0.1:
-        for name, t in timings.items():
-            base = ref_queries.get(name)
-            if base and base > 0:
-                r = round(t / base, 2)
-                ratios[name] = r
-                if r > AMBIENT_FLAG_RATIO:
-                    flagged.append(name)
     payload = {
         "metric": "headline_queries_total",
         "value": total,
@@ -246,11 +213,8 @@ def main() -> None:
         "runs_per_query": n_runs,
         "sf": sf,
         "loadavg": loadavg,
-        "ratio_vs_committed": ratios,
-        "committed_reference": ref_name,
-        # queries > AMBIENT_FLAG_RATIO x their committed idle timing:
-        # re-measure on an idle box before adjudicating as regression
-        "flagged_re_measure": sorted(flagged),
+        # task slots of the session's master: the host the timings are from
+        "cpus": task_slots(spark.sparkContext.master),
     }
     print(json.dumps(payload))
     # The driver records only the stdout TAIL (2000 chars), which truncates

@@ -1,31 +1,102 @@
-"""Per-query profiler (optimization guide §1): isolate one registered query
-in THIS session, time it (min/median of N collects, exactly the bench's
-methodology), capture `.explain("formatted")`, and break the cost down by
-stage via the UI REST API (shuffle bytes, task time, GC, spill).
+"""Per-query profiler: isolate registered queries in one session, time them
+with the bench's loop (``bench.timed_runs``), print each formatted plan, and
+break the timed runs down by layer from the Spark event log, with the reader
+perfbench's traced run uses (``perfbench/common.read_event_log``).
 
 Usage:
-  SPARK_UI=true python tools/profile_query.py <name> [--runs 5] [--sf DIR]
-      [--explain-only] [--plan-out FILE]
+  python tools/profile_query.py <name> [<name> ...] [--runs 5] [--sf DIR]
+      [--explain-only] [--plan-out DIR]
 
-Stage rows are attributed to the query via setJobDescription; the warm-up
-run is excluded from stage attribution by tagging only the timed runs.
+Per query it prints the plan (or writes ``DIR/<name>.txt``), a timing line
+(warm-up, min, median, every run) and, once the session has stopped, one
+layer line: jobs, stages, tasks, executor CPU, GC, shuffle read/write,
+spill and Python stages, each the mean per timed run. Only the timed runs
+are tagged, so the warm-up's jobs are not counted. Like perfbench's, the
+session runs at ``local[nproc]`` with its scratch files and event log in a
+temporary directory that is removed at exit.
 """
 
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
-import time
-import urllib.request
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import timed_runs  # noqa: E402
+from perfbench.common import (  # noqa: E402
+    REQ_PROPERTY,
+    median,
+    pin_host,
+    read_event_log,
+    stop_session,
+)
 
-def _rest(base: str, path: str):
-    with urllib.request.urlopen(base + path, timeout=10) as r:
-        return json.load(r)
+LAYERS = (
+    "jobs",
+    "stages",
+    "tasks",
+    "executor_cpu_s",
+    "gc_s",
+    "shuffle_read_mb",
+    "shuffle_write_mb",
+    "spill_mb",
+    "python_stages",
+)
+
+
+def profile(args: argparse.Namespace, work: str) -> None:
+    # the event-log confs are JVM launch options: set before pyspark starts
+    event_log = os.path.join(work, "eventlog")
+    pin_host(work, None if args.explain_only else event_log)
+    from trike_spark.cache import release_checkpoints
+    from trike_spark.plans import formatted_plan
+    from trike_spark.registry import REGISTRY, load_all_query_modules
+    from trike_spark.session import get_spark
+
+    load_all_query_modules()
+    spark = get_spark("profile")
+    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    if args.plan_out:
+        os.makedirs(args.plan_out, exist_ok=True)
+
+    runs: dict[str, list[float]] = {}
+    try:
+        for name in args.names:
+            plan = formatted_plan(REGISTRY[name].fn(spark, args.sf))
+            release_checkpoints()
+            if args.plan_out:
+                with open(os.path.join(args.plan_out, f"{name}.txt"), "w") as f:
+                    f.write(plan)
+            else:
+                print(plan)
+            if args.explain_only:
+                continue
+
+            (warm,) = timed_runs(spark, name, args.sf, 1)
+            sc.setLocalProperty(REQ_PROPERTY, name)
+            try:
+                runs[name] = timed_runs(spark, name, args.sf, args.runs)
+            finally:
+                sc.setLocalProperty(REQ_PROPERTY, None)
+            ts = runs[name]
+            print(
+                f"=== {name}: warm {warm:.3f}s | min {min(ts):.3f}s "
+                f"| med {median(ts):.3f}s | runs {[round(t, 3) for t in ts]}",
+                flush=True,
+            )
+    finally:
+        stop_session(spark)
+
+    # the event log is complete once the session has stopped
+    stats = read_event_log(event_log) if runs else {}
+    for name, ts in runs.items():
+        m = stats.get(name, {})
+        cells = " ".join(f"{k}={round(m.get(k, 0.0) / len(ts), 3):g}" for k in LAYERS)
+        print(f"layers {name} (per timed run, {len(ts)} runs): {cells}")
 
 
 def main() -> None:
@@ -34,96 +105,10 @@ def main() -> None:
     ap.add_argument("--runs", type=int, default=5)
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--explain-only", action="store_true")
-    ap.add_argument("--plan-out", default=None, help="write explain('formatted') here")
+    ap.add_argument("--plan-out", default=None, help="write each plan to DIR/<name>.txt")
     args = ap.parse_args()
-
-    os.environ.setdefault("SPARK_UI", "true")
-    from trike_spark.cache import release_checkpoints
-    from trike_spark.registry import REGISTRY, load_all_query_modules
-    from trike_spark.session import get_spark
-
-    load_all_query_modules()
-    spark = get_spark("profile")
-    spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
-
-    ui = sc.uiWebUrl  # e.g. http://host:4040
-    app_id = sc.applicationId
-
-    for name in args.names:
-        fn = REGISTRY[name].fn
-        df = fn(spark, args.sf)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        if args.plan_out:
-            with open(args.plan_out, "w") as f:
-                f.write(plan)
-        else:
-            print(plan)
-        release_checkpoints()
-        if args.explain_only:
-            continue
-
-        # warm-up (untagged)
-        t0 = time.perf_counter()
-        fn(spark, args.sf).collect()
-        warm = time.perf_counter() - t0
-        release_checkpoints()
-
-        jobs_before = {j["jobId"] for j in _rest(ui, f"/api/v1/applications/{app_id}/jobs")} if ui else set()
-
-        times = []
-        sc.setJobDescription(f"profile:{name}")
-        for _ in range(args.runs):
-            t0 = time.perf_counter()
-            fn(spark, args.sf).collect()
-            times.append(time.perf_counter() - t0)
-            release_checkpoints()
-        sc.setJobDescription(None)
-        times.sort()
-        med = times[len(times) // 2]
-        print(
-            f"\n=== {name}: warm {warm:.3f}s | min {times[0]:.3f}s "
-            f"| med {med:.3f}s | runs {[round(t, 3) for t in times]}"
-        )
-
-        if not ui:
-            continue
-        jobs = [j for j in _rest(ui, f"/api/v1/applications/{app_id}/jobs") if j["jobId"] not in jobs_before]
-        stage_ids = sorted({s for j in jobs for s in j.get("stageIds", [])})
-        rows = []
-        for sid in stage_ids:
-            try:
-                st_list = _rest(ui, f"/api/v1/applications/{app_id}/stages/{sid}")
-            except Exception:
-                continue
-            for st in st_list:
-                if st.get("status") == "SKIPPED":
-                    continue
-                rows.append(
-                    {
-                        "stage": sid,
-                        "name": st.get("name", "")[:60],
-                        "tasks": st.get("numCompleteTasks"),
-                        "ms": st.get("executorRunTime"),
-                        "cpu_ms": (st.get("executorCpuTime") or 0) // 1_000_000,
-                        "gc_ms": st.get("jvmGcTime"),
-                        "in_mb": round((st.get("inputBytes") or 0) / 1e6, 1),
-                        "sh_r_mb": round((st.get("shuffleReadBytes") or 0) / 1e6, 1),
-                        "sh_w_mb": round((st.get("shuffleWriteBytes") or 0) / 1e6, 1),
-                        "spill_mb": round((st.get("diskBytesSpilled") or 0) / 1e6, 1),
-                    }
-                )
-        rows.sort(key=lambda r: -(r["ms"] or 0))
-        total_ms = sum(r["ms"] or 0 for r in rows)
-        print(f"stages (timed runs only, total executorRunTime {total_ms} ms across {args.runs} runs):")
-        for r in rows[:25]:
-            print(
-                f"  s{r['stage']:>4} {r['ms']:>7}ms cpu{r['cpu_ms']:>7} gc{r['gc_ms']:>5} "
-                f"t{r['tasks']:>3} in{r['in_mb']:>8} shR{r['sh_r_mb']:>8} shW{r['sh_w_mb']:>8} "
-                f"sp{r['spill_mb']:>6}  {r['name']}"
-            )
+    with tempfile.TemporaryDirectory(prefix="profile_query-") as work:
+        profile(args, work)
 
 
 if __name__ == "__main__":

@@ -23,7 +23,6 @@ from __future__ import annotations
 import math
 import os
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -54,8 +53,8 @@ def main(
     points: list[tuple[float, str]],
     queries: list[str] | None = None,
 ) -> None:
-    from trike_spark.cache import release_checkpoints
-    from trike_spark.registry import REGISTRY, load_all_query_modules
+    from bench import timed_runs
+    from trike_spark.registry import load_all_query_modules
     from trike_spark.session import get_spark
 
     load_all_query_modules()
@@ -63,17 +62,8 @@ def main(
     spark.sparkContext.setLogLevel("ERROR")
 
     def best_of(name: str, sf_dir: str) -> float:
-        REGISTRY[name].fn(spark, sf_dir).collect()  # warm-up
-        release_checkpoints()
-        runs = []
-        for _ in range(N_RUNS):
-            t0 = time.perf_counter()
-            REGISTRY[name].fn(spark, sf_dir).collect()
-            runs.append(time.perf_counter() - t0)
-            release_checkpoints()
-        spark.catalog.clearCache()
-        spark._jvm.System.gc()
-        return min(runs)
+        # the first run is a warm-up and is dropped
+        return min(timed_runs(spark, name, sf_dir, N_RUNS + 1)[1:])
 
     header = " ".join(f"sf{sf:>6g}" for sf, _ in points)
     alphas = " ".join(

@@ -136,7 +136,7 @@ def get_spark(app_name: str = "trike_spark", config: EngineConfig | None = None)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
-        .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
+        .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # In local[] mode the driver JVM IS the executor: all task memory,
         # shuffle buffers, and broadcast blocks live in this one heap. 8g
